@@ -10,8 +10,9 @@ Mapping:
   Semaphore single-writer      → micro-batches are serialized per query
   crash loses buffers          → checkpointLocation (exactly-once)
 
-The merge inside foreachBatch is the same ``merge_state`` the batch
-path uses — one code path for both, which is the point of Structured
+The merge inside foreachBatch is the ``merge_state`` algebra the batch
+path uses (untouched rows + ``compact_state`` of the touched slice and
+the batch) — one semantics for both, which is the point of Structured
 Streaming. The persisted index is the compacted CELL STATE (with
 tombstones), so conflict resolution is by cell (ts, seq) and
 micro-batch boundaries can never change the result; the flat document
@@ -23,6 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import (
+    DecimalType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from hbase_increment_index_spark.cdc.index_builder import (
     compact_state,
@@ -34,6 +42,19 @@ CELL_LOG_DDL = (
     "op string, row_key string, family string, qualifier string, "
     "value string, ts timestamp, seq long"
 )
+#: exact-decimal type of the rollup view's sums
+_SUM_T = "decimal(30,6)"
+
+
+def _hpath(spark: SparkSession, path: str):
+    return spark._jvm.org.apache.hadoop.fs.Path(path)
+
+
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — scheme-agnostic:
+    file://, hdfs://, s3a://."""
+    hpath = _hpath(spark, path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def _committed_state_exists(spark: SparkSession, path: str) -> bool:
@@ -43,10 +64,8 @@ def _committed_state_exists(spark: SparkSession, path: str) -> bool:
     and requires the _SUCCESS marker, so a half-written directory from a
     crashed overwrite counts as absent while a transient read failure of
     existing data still surfaces as an error in the caller's read."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")))
+    fs, _ = _fs(spark, path)
+    return bool(fs.exists(_hpath(spark, path + "/_SUCCESS")))
 
 
 def read_cell_stream(
@@ -77,28 +96,41 @@ def start_index_maintenance(
 ) -> StreamingQuery:
     """Continuously fold CDC micro-batches into the index.
 
-    Each micro-batch: read current cell state → merge_state (broadcast
-    anti-join on touched keys; only the touched slice re-compacts) →
-    atomic rewrite of the state + re-derive the document serving view.
-    Real deployments would target a MERGE-capable table format
-    (Delta/Iceberg) so the rewrite touches only matching files; plain
-    parquet rewrite keeps this container-dependency-free.
+    Each micro-batch (``merge_microbatch``): pin the batch and collect
+    its touched row keys → only the touched slice of the cell state is
+    re-compacted with the batch (the merge_state algebra) → every
+    store (state, document serving view, postings, facet and rollup
+    views) is computed once into a staging directory → each staging directory is published by two
+    Hadoop FileSystem renames (store → ``._old``, staging → store).
+    The commit is not atomic across stores, and per store its one
+    non-atomic window is the gap between those two renames, where the
+    store path is absent; the next micro-batch rolls such a store back
+    to ``._old`` before it reads, and a replayed batch over any mix of
+    published and unpublished stores gives the uninterrupted result.
+    The untouched rows of state, view and postings are still copied
+    into each new generation; real deployments would target a
+    MERGE-capable table format (Delta/Iceberg) so a commit touches only
+    matching files (``merge_microbatch_cow`` is the dependency-free
+    version of that).
 
     With ``postings_field`` set, the FULL-TEXT index is maintained
     incrementally too (the reference's actual job — keep Solr in sync
     with the row store, reference README.md:5-10): per batch, postings
-    for touched row keys are dropped via a broadcast anti-join and the
-    touched keys' fresh postings appended (search.inverted.
-    merge_postings) — work ∝ batch size, never corpus size. Written to
+    for touched row keys are dropped and the touched keys' fresh
+    postings appended (search.inverted.merge_postings) — the tokenizing
+    work is ∝ batch size, never corpus size. Written to
     ``index_path + "_postings"``.
 
     With ``facet_field`` set, a materialized facet-count view over that
     document field is maintained incrementally as well (the aggregate
-    analogue — a Solr facet over the live index): the pre-image counts
-    of touched docs are captured BEFORE the rewrite (batch-bounded, so
-    they collect to the driver), the post-image counts after, and the
-    ±delta merges into ``index_path + "_facets"`` via groupBy-sum with
-    zero-count dropout. Work ∝ batch size + facet cardinality.
+    analogue — a Solr facet over the live index): the touched docs'
+    pre-image rows and the current view are journaled to batch-scoped
+    parquet before anything is published, the post-image comes from the
+    batch's documents delta, and the ±delta merges into
+    ``index_path + "_facets"`` via groupBy-sum with zero-count dropout.
+    Work ∝ batch size + facet cardinality. ``rollup_key_field`` /
+    ``rollup_value_field`` maintain a (count, Σvalue) view the same way
+    (``index_path + "_rollup"``).
     """
     spark = cell_stream.sparkSession
 
@@ -138,88 +170,130 @@ def merge_microbatch(
     SAME batch; because ``merge_state`` re-compacts by cell coordinates
     + (ts, seq), replaying a batch over already-merged state is a
     no-op (exactly-once effect from at-least-once delivery +
-    idempotent merge)."""
+    idempotent merge).
+
+    The commit writes each store once and recomputes only what the
+    batch touched (untouched rows are copied into the new generation,
+    not recomputed):
+
+    1. Pin the batch (its source is read once) and collect its touched
+       row keys — batch-bounded, the one driver collect of the fold.
+    2. Compute every store into ``<store>._staging_<batch_id>``,
+       reading only the stores as they stood before the commit (with
+       fixed schemas, so no read starts a schema-inference job):
+       state = untouched rows + the re-compacted touched slice; the
+       documents view = old view minus touched ids + the slice's
+       documents; postings and the aggregate views from that documents
+       delta. The union is coalesced to the store's size in split-sized
+       files (``_target_files``), so files never pile up across commits.
+    3. Publish each staging directory by Hadoop ``FileSystem`` renames
+       (store → ``<store>._old``, staging → store, drop ``._old``),
+       then delete the aggregate views' journals.
+
+    A crash leaves each store either published or not; the only window
+    where a store path is absent is between its two renames, and the
+    next call rolls such a store back to ``._old`` before reading
+    (``_recover_store``), so recovery never re-bootstraps from the
+    batch alone. Replaying over any mix of published and unpublished
+    stores is exact: state, documents and postings are idempotent by
+    construction, and the aggregate views (facets, rollup) recompute
+    from journals of their pre-images (``._pre_<id>``, ``._base_<id>``)
+    written before anything is published.
+    """
+    if rollup_key_field is not None and rollup_value_field is None:
+        raise ValueError(
+            "rollup_key_field requires rollup_value_field (the summed column)"
+        )
+    # every later use of the batch reads these blocks, never the source
+    batch = batch.localCheckpoint(eager=False)
+    batch_keys = batch.select("row_key").collect()
+    if not batch_keys:  # commit-only-if-data (SolrIndexTools.java:66-67)
+        return
+    keys = sorted({r[0] for r in batch_keys if r[0] is not None})
+
     state_path = index_path + "_state"
     postings_path = index_path + "_postings"
     facets_path = index_path + "_facets"
     rollup_path = index_path + "_rollup"
-
-    if batch.isEmpty():  # commit-only-if-data (SolrIndexTools.java:66-67)
-        return
-    import shutil
-
-    touched = batch.select(F.col("row_key").alias("id")).distinct()
-    # facet pre-image: the touched docs' current facet counts, read and
-    # MATERIALIZED before the serving view is overwritten. Written to a
-    # batch-scoped staging parquet (facet-cardinality-sized) so the
-    # pre-image never lands in driver memory — executors write it,
-    # executors read it back for the ±delta merge.
-    # CRASH-REPLAY NOTE: the pre-image staging file doubles as the
-    # replay journal. It is deleted only after the derived view commits,
-    # so if the process dies between the index overwrite and the view
-    # write, the replayed batch REUSES the journaled pre-image instead
-    # of recomputing it from the already-merged index (which would make
-    # plus == minus and silently drop the batch's delta forever).
-    pre_path = fbase_path = None
-    if facet_field is not None and _committed_state_exists(spark, facets_path):
-        pre_path = facets_path + f"._pre_{batch_id}"
-        fbase_path = facets_path + f"._base_{batch_id}"
-        if not _committed_state_exists(spark, pre_path):
-            (
-                spark.read.parquet(index_path)
-                .join(F.broadcast(touched), "id", "left_semi")
-                .groupBy(F.col(facet_field).alias("facet_value"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .write.mode("overwrite")
-                .parquet(pre_path)
-            )
-        if not _committed_state_exists(spark, fbase_path):
-            spark.read.parquet(facets_path).write.mode("overwrite").parquet(fbase_path)
-    # rollup pre-image — same staging + replay-journal discipline
-    rpre_path = rbase_path = None
+    views = []  # (path, key field, key column, summed field | None)
+    if facet_field is not None:
+        views.append((facets_path, facet_field, "facet_value", None))
     if rollup_key_field is not None:
-        if rollup_value_field is None:
-            raise ValueError(
-                "rollup_key_field requires rollup_value_field (the summed column)"
-            )
-        if _committed_state_exists(spark, rollup_path):
-            rpre_path = rollup_path + f"._pre_{batch_id}"
-            rbase_path = rollup_path + f"._base_{batch_id}"
-            if not _committed_state_exists(spark, rpre_path):
-                (
-                    spark.read.parquet(index_path)
-                    .join(F.broadcast(touched), "id", "left_semi")
-                    .groupBy(F.col(rollup_key_field).alias("key"))
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(
-                            F.col(rollup_value_field).cast("decimal(30,6)")
-                        ).alias("sum_value"),
-                    )
-                    .write.mode("overwrite")
-                    .parquet(rpre_path)
-                )
-            if not _committed_state_exists(spark, rbase_path):
-                spark.read.parquet(rollup_path).write.mode("overwrite").parquet(rbase_path)
-    # Bootstrap-vs-merge is decided by an EXPLICIT existence probe of
-    # the committed state (the _SUCCESS marker a successful overwrite
-    # leaves behind), never by catching read errors: a transient IO
-    # failure must propagate and fail the micro-batch (checkpoint
-    # retries it) rather than silently resetting accumulated state.
-    if _committed_state_exists(spark, state_path):
-        state = spark.read.parquet(state_path)
-        merged = merge_state(state, batch)
-    else:
-        merged = compact_state(batch)
-    # rewrite via staging dir for atomicity on plain parquet
-    import shutil
+        views.append((rollup_path, rollup_key_field, "key", rollup_value_field))
+    stores = [state_path, index_path] + [p for p, *_ in views]
+    if postings_field is not None:
+        stores.append(postings_path)
+    for path in stores:
+        _recover_store(spark, path)
+    # bootstrap-vs-merge per store is an explicit probe of the _SUCCESS
+    # marker, never a caught read error: a transient IO failure must
+    # fail the micro-batch (the checkpoint retries it), not reset a store
+    exists = {path: _committed_state_exists(spark, path) for path in stores}
 
-    tmp = state_path + f"._staging_{batch_id}"
-    merged.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(state_path)
-    shutil.rmtree(tmp.replace("file:", ""), ignore_errors=True)
-    docs = documents_from_state(spark.read.parquet(state_path), qualifiers)
-    docs.write.mode("overwrite").parquet(index_path)
+    key_t = batch.schema["row_key"].dataType
+    val_t = batch.schema["value"].dataType
+    docs_schema = StructType(
+        [StructField("id", key_t)] + [StructField(q, val_t) for q in qualifiers]
+    )
+    id_hit = F.col("id").isin(keys)
+    staged: list[tuple[str, str]] = []  # (staging, store) in publish order
+
+    def stage(path: str, df: DataFrame) -> None:
+        staging = path + f"._staging_{batch_id}"
+        if exists[path]:
+            df = df.coalesce(_target_files(spark, path))
+        df.write.mode("overwrite").parquet(staging)
+        staged.append((staging, path))
+
+    # state: untouched rows + the touched slice re-compacted with the
+    # batch. The slice is pinned as the state write computes it; the
+    # documents delta reads it from there.
+    if exists[state_path]:
+        state = spark.read.schema(batch.schema).parquet(state_path)
+        hit = F.col("row_key").isin(keys)
+        new_slice = compact_state(
+            state.filter(hit).unionByName(batch)
+        ).localCheckpoint(eager=False)
+        # null keys match no key set: untouched, as in merge_state
+        new_state = state.filter(~hit | F.col("row_key").isNull()).unionByName(
+            new_slice
+        )
+    else:
+        new_slice = compact_state(batch).localCheckpoint(eager=False)
+        new_state = new_slice
+    # the documents delta: touched docs still live after the batch
+    # (a fully tombstoned row has none, so it drops out of the view)
+    docs_delta = documents_from_state(new_slice, qualifiers).localCheckpoint(
+        eager=False
+    )
+    if exists[index_path]:
+        old_docs = spark.read.schema(docs_schema).parquet(index_path)
+        new_docs = old_docs.filter(~id_hit).unionByName(docs_delta)
+    else:
+        old_docs = None
+        new_docs = documents_from_state(new_state, qualifiers)
+
+    # aggregate-view journals, written before any store is published:
+    # the touched docs' pre-image rows and the view as it stands. A
+    # replay after a partial publish reuses them instead of reading
+    # the already-merged documents view (which would net the delta to
+    # zero and lose it).
+    journals = {}
+    for path, field, key_col, value_field in views:
+        if not exists[path] or old_docs is None:
+            continue  # rebuilt from the new documents view below
+        pre_path, base_path = path + f"._pre_{batch_id}", path + f"._base_{batch_id}"
+        if not _committed_state_exists(spark, pre_path):
+            pre = _view_rows(old_docs.filter(id_hit), field, key_col, value_field)
+            pre.write.mode("overwrite").parquet(pre_path)
+        if not _committed_state_exists(spark, base_path):
+            spark.read.schema(_view_schema(key_col, val_t, value_field)).parquet(
+                path
+            ).write.mode("overwrite").parquet(base_path)
+        journals[path] = (pre_path, base_path)
+
+    stage(state_path, new_state)
+    stage(index_path, new_docs)
 
     if postings_field is not None:
         from hbase_increment_index_spark.search.inverted import (
@@ -227,97 +301,134 @@ def merge_microbatch(
             merge_postings,
         )
 
-        docs = spark.read.parquet(index_path)
-        changed = docs.join(F.broadcast(touched), "id", "left_semi").select(
-            "id", postings_field
-        )
-        if _committed_state_exists(spark, postings_path):
+        if exists[postings_path]:
+            postings_schema = StructType(
+                [
+                    StructField("term", StringType()),
+                    StructField("id", key_t),
+                    StructField("tf", LongType()),
+                ]
+            )
             postings = merge_postings(
-                spark.read.parquet(postings_path),
-                changed,
-                touched,
+                spark.read.schema(postings_schema).parquet(postings_path),
+                docs_delta.select("id", postings_field),
+                None,
                 "id",
                 postings_field,
+                touched_ids=keys,
             )
         else:
-            postings = build_inverted_index(docs, "id", postings_field)
-        ptmp = postings_path + f"._staging_{batch_id}"
-        postings.write.mode("overwrite").parquet(ptmp)
-        spark.read.parquet(ptmp).write.mode("overwrite").parquet(postings_path)
-        shutil.rmtree(ptmp.replace("file:", ""), ignore_errors=True)
+            postings = build_inverted_index(new_docs, "id", postings_field)
+        stage(postings_path, postings)
 
-    if facet_field is not None:
-        new_docs = spark.read.parquet(index_path)
-        if pre_path is None:
-            fcounts = new_docs.groupBy(
-                F.col(facet_field).alias("facet_value")
-            ).agg(F.count(F.lit(1)).alias("n"))
-        else:
-            plus = (
-                new_docs.join(F.broadcast(touched), "id", "left_semi")
-                .groupBy(F.col(facet_field).alias("facet_value"))
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            minus = spark.read.parquet(pre_path).select(
-                "facet_value", (-F.col("n")).cast("long").alias("n")
-            )
-            fcounts = (
-                spark.read.parquet(fbase_path)
-                .unionByName(plus)
-                .unionByName(minus)
-                .groupBy("facet_value")
-                .agg(F.sum("n").alias("n"))
-                .filter(F.col("n") > 0)
-            )
-        ftmp = facets_path + f"._staging_{batch_id}"
-        fcounts.write.mode("overwrite").parquet(ftmp)
-        spark.read.parquet(ftmp).write.mode("overwrite").parquet(facets_path)
-        shutil.rmtree(ftmp.replace("file:", ""), ignore_errors=True)
-        if pre_path is not None:
-            shutil.rmtree(pre_path.replace("file:", ""), ignore_errors=True)
-            shutil.rmtree(fbase_path.replace("file:", ""), ignore_errors=True)
-
-    if rollup_key_field is not None:
-        # incremental (count, Σvalue) rollup view — the additive-
-        # aggregate IVM (facets.merge_rollup_sums semantics), exact
-        # decimals end-to-end so view generations never drift
-        new_docs = spark.read.parquet(index_path)
-        val = F.col(rollup_value_field).cast("decimal(30,6)")
-        if rpre_path is None:
-            rview = new_docs.groupBy(F.col(rollup_key_field).alias("key")).agg(
-                F.count(F.lit(1)).alias("n"), F.sum(val).alias("sum_value")
+    for path, field, key_col, value_field in views:
+        # additive view IVM: view − pre-image + post-image per key, with
+        # zero-count keys dropped; exact decimals for the summed field
+        # so view generations never drift
+        schema = _view_schema(key_col, val_t, value_field)
+        if path in journals:
+            pre_path, base_path = journals[path]
+            neg = [F.col(key_col), (-F.col("n")).alias("n")]
+            if value_field is not None:
+                neg.append((-F.col("sum_value")).alias("sum_value"))
+            parts = (
+                spark.read.schema(schema)
+                .parquet(base_path)
+                .unionByName(_view_rows(docs_delta, field, key_col, value_field))
+                .unionByName(spark.read.schema(schema).parquet(pre_path).select(*neg))
             )
         else:
-            plus = (
-                new_docs.join(F.broadcast(touched), "id", "left_semi")
-                .groupBy(F.col(rollup_key_field).alias("key"))
-                .agg(F.count(F.lit(1)).alias("n"), F.sum(val).alias("sum_value"))
-            )
-            minus = spark.read.parquet(rpre_path).select(
-                "key",
-                (-F.col("n")).cast("long").alias("n"),
-                (-F.col("sum_value")).alias("sum_value"),
-            )
-            rview = (
-                spark.read.parquet(rbase_path)
-                .unionByName(plus)
-                .unionByName(minus)
-                .groupBy("key")
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.sum("sum_value").cast("decimal(30,6)").alias("sum_value"),
-                )
-                .filter(F.col("n") > 0)
-            )
-        rtmp = rollup_path + f"._staging_{batch_id}"
-        rview.write.mode("overwrite").parquet(rtmp)
-        spark.read.parquet(rtmp).write.mode("overwrite").parquet(rollup_path)
-        shutil.rmtree(rtmp.replace("file:", ""), ignore_errors=True)
-        if rpre_path is not None:
-            shutil.rmtree(rpre_path.replace("file:", ""), ignore_errors=True)
-            shutil.rmtree(rbase_path.replace("file:", ""), ignore_errors=True)
+            parts = _view_rows(new_docs, field, key_col, value_field)
+        aggs = [F.sum("n").alias("n")]
+        if value_field is not None:
+            aggs.append(F.sum("sum_value").cast(_SUM_T).alias("sum_value"))
+        stage(path, parts.groupBy(key_col).agg(*aggs).filter(F.col("n") > 0))
+
+    for staging, path in staged:
+        _publish(spark, staging, path)
+    for pre_path, base_path in journals.values():
+        _delete(spark, pre_path)
+        _delete(spark, base_path)
 
 
+def _view_schema(key_col: str, key_t, value_field: str | None) -> StructType:
+    """Read schema of an aggregate view or its journals. The sum reads
+    as decimal(38,6): a pre-image summed with ``F.sum`` is stored that
+    wide, and decimal(30,6) files widen to it losslessly."""
+    fields = [StructField(key_col, key_t), StructField("n", LongType())]
+    if value_field is not None:
+        fields.append(StructField("sum_value", DecimalType(38, 6)))
+    return StructType(fields)
+
+
+def _view_rows(
+    docs: DataFrame, field: str, key_col: str, value_field: str | None
+) -> DataFrame:
+    """One (key, n=1[, value]) row per document: the additive unit the
+    aggregate views sum."""
+    cols = [F.col(field).alias(key_col), F.lit(1).cast("long").alias("n")]
+    if value_field is not None:
+        cols.append(F.col(value_field).cast(_SUM_T).alias("sum_value"))
+    return docs.select(*cols)
+
+
+def _target_files(spark: SparkSession, path: str) -> int:
+    """File count for the next generation of a committed store: its
+    data bytes over Spark's split size (``spark.sql.files.
+    maxPartitionBytes``), at least one. Derived from the store's size,
+    not from its current file count, so commits can neither pile up
+    small files nor drift towards fewer, larger ones."""
+    fs, hpath = _fs(spark, path)
+    size = sum(
+        st.getLen()
+        for st in fs.listStatus(hpath)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    )
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(1, -(-size // split))
+
+
+def _delete(spark: SparkSession, path: str) -> None:
+    fs, hpath = _fs(spark, path)
+    fs.delete(hpath, True)
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+def _publish(spark: SparkSession, staging: str, path: str) -> None:
+    """Swap a committed staging directory in for ``path``: two renames,
+    then the old generation is dropped. A reader sees the old or the
+    new directory, except between the two renames."""
+    fs, hpath = _fs(spark, path)
+    old = _hpath(spark, path + "._old")
+    if fs.exists(hpath):
+        _rename(fs, hpath, old)
+    _rename(fs, _hpath(spark, staging), hpath)
+    fs.delete(old, True)
+
+
+def _recover_store(spark: SparkSession, path: str) -> None:
+    """Undo what a crashed commit left at ``path``: a store absent
+    between the two renames of ``_publish`` rolls back to its
+    committed ``._old``; a leftover ``._old`` beside a committed store
+    is dropped (a later rename onto it would nest the store inside).
+    Staging directories need nothing: the replay of the batch
+    overwrites its own. Journals (``._pre_<id>``, ``._base_<id>``)
+    stay: the replay needs them."""
+    fs, hpath = _fs(spark, path)
+    old = _hpath(spark, path + "._old")
+    if not fs.exists(old):
+        return
+    if not _committed_state_exists(spark, path) and _committed_state_exists(
+        spark, path + "._old"
+    ):
+        fs.delete(hpath, True)
+        _rename(fs, old, hpath)
+    else:
+        fs.delete(old, True)
 
 
 def merge_microbatch_cow(

@@ -970,3 +970,248 @@ def test_cow_fingerprint_store_matches_fresh_build_and_serves_exact_dedup(
         ).collect()
     }
     assert served == {("Z", "B"), ("Y", "A")}
+
+
+# --------------------------------------------------------------------------
+# the stage -> rename commit of merge_microbatch
+
+_FOLD_KW = dict(qualifiers=["name", "cat"], postings_field="name", facet_field="cat")
+_STORES = ("_state", "", "_postings", "_facets")
+SCHEMA_COLS = ["op", "row_key", "family", "qualifier", "value", "ts", "seq"]
+
+
+def _fold_batches(spark):
+    b1 = [
+        ("put", "A", "cf", "name", "apple pie", _ts(1), 1),
+        ("put", "A", "cf", "cat", "fruit", _ts(1), 2),
+        ("put", "B", "cf", "name", "banana bread", _ts(2), 3),
+        ("put", "B", "cf", "cat", "fruit", _ts(2), 4),
+        ("put", "C", "cf", "name", "carrot cake", _ts(3), 5),
+        ("put", "C", "cf", "cat", "veg", _ts(3), 6),
+        ("put", "D", "cf", "name", "date loaf", _ts(4), 7),
+        ("put", "D", "cf", "cat", "fruit", _ts(4), 8),
+    ]
+    b2 = [
+        ("put", "A", "cf", "name", "apple tart", _ts(10), 20),  # reindex A
+        ("put", "A", "cf", "cat", "veg", _ts(10), 21),  # facet move
+        ("delete", "B", "cf", None, None, _ts(11), 22),  # drop B
+        ("put", "E", "cf", "name", "egg tart", _ts(12), 23),  # new doc
+        ("put", "E", "cf", "cat", "grain", _ts(12), 24),
+        ("put", "C", "cf", "cat", "stale", _ts(2), 25),  # older than C's cell: loses
+    ]
+    return spark.createDataFrame(b1, SCHEMA), spark.createDataFrame(b2, SCHEMA)
+
+
+def _fold_snapshot(spark, index_path):
+    def rows(suffix, cols):
+        frame = spark.read.parquet(index_path + suffix).select(*cols)
+        return sorted(tuple(r) for r in frame.collect())
+
+    return {
+        "state": rows("_state", SCHEMA_COLS),
+        "docs": rows("", ["id", "name", "cat"]),
+        "postings": rows("_postings", ["term", "id", "tf"]),
+        "facets": rows("_facets", ["facet_value", "n"]),
+    }
+
+
+def _leftovers(index_path):
+    import glob
+
+    return sorted(
+        p
+        for p in glob.glob(index_path + "*")
+        if any(t in p for t in ("._old", "._staging_", "._pre_", "._base_"))
+    )
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_fold(spark, tmp_path_factory):
+    """State, documents, postings and facets after folding both batches
+    with no crash: what every recovery must reproduce."""
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
+
+    index_path = str(tmp_path_factory.mktemp("fold") / "index")
+    b1, b2 = _fold_batches(spark)
+    merge_microbatch(spark, b1, 0, index_path, **_FOLD_KW)
+    merge_microbatch(spark, b2, 1, index_path, **_FOLD_KW)
+    snap = _fold_snapshot(spark, index_path)
+    assert snap["docs"] == [
+        ("A", "apple tart", "veg"),
+        ("C", "carrot cake", "veg"),
+        ("D", "date loaf", "fruit"),
+        ("E", "egg tart", "grain"),
+    ]
+    assert snap["facets"] == [("fruit", 1), ("grain", 1), ("veg", 2)]
+    assert _leftovers(index_path) == []
+    return snap
+
+
+@pytest.mark.parametrize("store", ["_state", "_facets"])
+def test_crash_between_publish_renames_rolls_back(
+    spark, dirs, monkeypatch, uninterrupted_fold, store
+):
+    """A crash between a store's two publish renames leaves the store
+    path absent, its previous generation committed at ``._old`` and the
+    new one committed in staging. The replay must roll the store back
+    to ``._old`` (not re-bootstrap it from the batch alone) and end
+    exactly where the uninterrupted fold ends."""
+    import os
+
+    from hbase_increment_index_spark.streaming import cdc_stream
+
+    _, index_path, _ = dirs
+    b1, b2 = _fold_batches(spark)
+    cdc_stream.merge_microbatch(spark, b1, 0, index_path, **_FOLD_KW)
+
+    target = index_path + store
+    rename = cdc_stream._rename
+
+    def crash_before_second_rename(fs, src, dst):
+        if src.getName() == os.path.basename(target) + "._staging_1":
+            raise RuntimeError("simulated crash")
+        rename(fs, src, dst)
+
+    monkeypatch.setattr(cdc_stream, "_rename", crash_before_second_rename)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        cdc_stream.merge_microbatch(spark, b2, 1, index_path, **_FOLD_KW)
+    monkeypatch.setattr(cdc_stream, "_rename", rename)
+
+    assert not os.path.exists(target)
+    assert os.path.exists(target + "._old/_SUCCESS")
+    assert os.path.exists(target + "._staging_1/_SUCCESS")
+
+    cdc_stream.merge_microbatch(spark, b2, 1, index_path, **_FOLD_KW)
+    assert _fold_snapshot(spark, index_path) == uninterrupted_fold
+    assert _leftovers(index_path) == []
+
+
+@pytest.mark.parametrize("published", [2, 4])
+def test_replay_after_partial_publish(
+    spark, dirs, monkeypatch, uninterrupted_fold, published
+):
+    """A crash after ``published`` of the four stores are swapped in
+    (state, documents, postings, facets in publish order; 2 = the
+    documents view is new and the facet view old; 4 = every store
+    published, journals not yet deleted): replaying the batch
+    over the mix of new and old stores gives the uninterrupted result.
+    The facet view needs its journals for this — recomputing its
+    pre-image from an already-published documents view would net the
+    batch's delta to zero."""
+    from hbase_increment_index_spark.streaming import cdc_stream
+
+    _, index_path, _ = dirs
+    b1, b2 = _fold_batches(spark)
+    cdc_stream.merge_microbatch(spark, b1, 0, index_path, **_FOLD_KW)
+
+    publish, delete = cdc_stream._publish, cdc_stream._delete
+    done = []
+
+    def crash_after_n(spark_, staging, path):
+        if len(done) == published:
+            raise RuntimeError("simulated crash")
+        publish(spark_, staging, path)
+        done.append(path)
+
+    def crash_on_journal(spark_, path):
+        if "._pre_" in path or "._base_" in path:
+            raise RuntimeError("simulated crash")
+        delete(spark_, path)
+
+    monkeypatch.setattr(cdc_stream, "_publish", crash_after_n)
+    monkeypatch.setattr(cdc_stream, "_delete", crash_on_journal)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        cdc_stream.merge_microbatch(spark, b2, 1, index_path, **_FOLD_KW)
+    monkeypatch.setattr(cdc_stream, "_publish", publish)
+    monkeypatch.setattr(cdc_stream, "_delete", delete)
+    assert done == [index_path + s for s in _STORES][:published]
+
+    cdc_stream.merge_microbatch(spark, b2, 1, index_path, **_FOLD_KW)
+    assert _fold_snapshot(spark, index_path) == uninterrupted_fold
+    assert _leftovers(index_path) == []
+
+
+#: Spark jobs of one commit into an index with state, postings and facets
+#: (session of conftest.py: AQE off, 8 shuffle partitions)
+COMMIT_JOB_BUDGET = 7
+
+
+def test_commit_job_budget_and_single_write_per_store(spark, dirs, monkeypatch):
+    """One commit of a small batch into an existing index stays within
+    the job budget, writes every directory once and never writes a
+    store in place: each store is staged, then renamed in (the old
+    staging -> store copy wrote every store twice)."""
+    from pyspark.sql import DataFrameWriter
+
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
+
+    _, index_path, _ = dirs
+    b1, b2 = _fold_batches(spark)
+    merge_microbatch(spark, b1, 0, index_path, **_FOLD_KW)
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *a, **kw):
+        written.append(path)
+        return parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    sc = spark.sparkContext
+    sc.setJobGroup("commit-job-budget", "one merge_microbatch commit", False)
+    try:
+        merge_microbatch(spark, b2, 1, index_path, **_FOLD_KW)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("commit-job-budget")
+    assert len(jobs) <= COMMIT_JOB_BUDGET
+
+    stores = {index_path + s for s in _STORES}
+    assert len(written) == len(set(written))
+    assert not stores & set(written)
+    assert {w for w in written if "._staging_" in w} == {
+        s + "._staging_1" for s in stores
+    }
+
+
+def test_store_file_count_flat_across_commits(spark, dirs):
+    """Each commit unions a store's untouched rows with the batch's
+    delta; without coalescing back, every commit would add the delta's
+    partitions as new files. Over ten commits every store keeps one
+    file per split size of data: one here."""
+    import os
+
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
+
+    _, index_path, _ = dirs
+
+    def files(path):
+        return sum(1 for f in os.listdir(path) if not f.startswith(("_", ".")))
+
+    base = []
+    for i in range(64):
+        base += [
+            ("put", f"k{i:03d}", "cf", "name", f"word{i % 7} text{i}", _ts(1), 2 * i),
+            ("put", f"k{i:03d}", "cf", "cat", f"c{i % 5}", _ts(1), 2 * i + 1),
+        ]
+    def fold(cells, batch_id):
+        batch = spark.createDataFrame(cells, SCHEMA)
+        merge_microbatch(spark, batch, batch_id, index_path, **_FOLD_KW)
+
+    fold(base, 0)
+    counts = []
+    seq = 1000
+    for b in range(1, 11):
+        cells = []
+        for j in range(3):
+            seq += 1
+            k = f"k{(b * 5 + j) % 64:03d}"
+            cells.append(("put", k, "cf", "name", f"updated {b} {j}", _ts(2), seq))
+        seq += 1
+        cells.append(("put", f"n{b:03d}", "cf", "cat", "new", _ts(2), seq))
+        seq += 1
+        cells.append(("delete", f"k{(b * 11) % 64:03d}", "cf", None, None, _ts(3), seq))
+        fold(cells, b)
+        counts.append({s: files(index_path + s) for s in _STORES})
+    assert counts == [{s: 1 for s in _STORES}] * len(counts)

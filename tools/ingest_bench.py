@@ -13,7 +13,10 @@ re-keyed self-union:
   steady      merge a 10% increment into committed state (the
               per-micro-batch work of streaming.cdc_stream)
   streaming   end-to-end availableNow run of start_index_maintenance
-              (includes per-batch full state rewrite + checkpointing —
+              (includes checkpointing, and per batch a new generation
+              of the state and the document view: untouched rows are
+              copied once into staging, only the touched slice is
+              recomputed, then the generation is published by rename —
               the conservative number)
 
 Prints one JSON line: {"n_cells": ..., "paths": {name: {"sec": s,
