@@ -87,12 +87,3 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view (mirrors the DuckDB
-    oracle's pre-registered views) and return the frames."""
-    frames = load_all(spark, sf_dir)
-    for name, df in frames.items():
-        df.createOrReplaceTempView(name)
-    return frames

@@ -265,15 +265,3 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
             F.sequence(F.lit(0).cast("long"), F.col("meta.duration_ms"), F.lit(every_ms).cast("long"))
         ).alias("frame_ms"),
     )
-
-
-def join_modalities(documents: DataFrame, embeddings: DataFrame, features: DataFrame | None = None) -> DataFrame:
-    """E5 — one row per document with text + embedding (+ media
-    features): plain equi-joins on the shared id. documents/embeddings
-    are co-keyed (doc_id == vec_id) in the fixtures."""
-    out = documents.join(
-        embeddings.withColumnRenamed("vec_id", "doc_id"), "doc_id", "inner"
-    )
-    if features is not None:
-        out = out.join(features.withColumnRenamed("media_id", "doc_id"), "doc_id", "left")
-    return out

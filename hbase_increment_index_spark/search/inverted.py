@@ -17,8 +17,6 @@ re-tokenized.
 
 from __future__ import annotations
 
-from collections.abc import Collection
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -70,10 +68,9 @@ def search_with_index(
 def merge_postings(
     postings: DataFrame,
     changed_docs: DataFrame,
-    deleted_ids: DataFrame | None,
+    deleted_ids: DataFrame,
     id_col: str,
     text_col: str,
-    touched_ids: Collection | None = None,
 ) -> DataFrame:
     """Incremental index maintenance — the postings-level twin of
     cdc.index_builder.merge_state, and the exact capability the
@@ -91,22 +88,13 @@ def merge_postings(
 
     Equivalent by construction to rebuilding from the post-mutation
     corpus (tested); idempotent for re-delivered batches.
-
-    ``touched_ids`` is for a caller that already holds the batch's
-    changed ∪ deleted ids on the driver (a batch-bounded list, e.g. the
-    streaming fold): the drop becomes an IN filter on the postings scan
-    and ``deleted_ids`` may be None, so neither the union + distinct
-    nor the broadcast job runs.
     """
-    if touched_ids is not None:
-        kept = postings.filter(~F.col(id_col).isin(list(touched_ids)))
-    else:
-        touched = (
-            changed_docs.select(id_col)
-            .unionByName(deleted_ids.select(id_col))
-            .distinct()
-        )
-        kept = postings.join(F.broadcast(touched), id_col, "left_anti")
+    touched = (
+        changed_docs.select(id_col)
+        .unionByName(deleted_ids.select(id_col))
+        .distinct()
+    )
+    kept = postings.join(F.broadcast(touched), id_col, "left_anti")
     fresh = build_inverted_index(changed_docs, id_col, text_col)
     return kept.unionByName(fresh.select(*kept.columns))
 

@@ -65,22 +65,6 @@ def soundex_sql(expr: str) -> str:
     )
 
 
-def sounds_like_terms(
-    postings: DataFrame,
-    query_word: str,
-    term_col: str = "term",
-    df_col: str = "df",
-) -> DataFrame:
-    """Vocabulary terms phonetically equal to ``query_word``: filter
-    the (term, df) vocabulary by soundex equality. The code of the
-    query is folded to a literal at plan time, so the filter is a
-    simple string equality over the vocabulary — broadcastable and
-    indexable (store the code as a vocabulary column at scale)."""
-    return postings.filter(
-        soundex_code(F.col(term_col)) == soundex_code(F.lit(query_word))
-    ).select(term_col, df_col)
-
-
 def phonetic_search(
     df: DataFrame,
     id_col: str,

@@ -1,4 +1,4 @@
-"""Stats surface — SURVEY.md §2.2 Q13–Q14 (Solr ``stats.field``).
+"""Stats surface — SURVEY.md §2.2 Q13 (Solr ``stats.field``).
 
 Every double aggregate goes through ``numeric.exact_*`` so results are
 order-independent (partition-count invariant) — see numeric.py.
@@ -32,21 +32,6 @@ def stats_field(
         exact_std(c).alias("stddev_v"),
         F.count(c).alias("count_v"),
         F.sum(F.when(c.isNull(), 1).otherwise(0)).cast("long").alias("missing_v"),
-    ]
-    if group_by:
-        return df.groupBy(*group_by).agg(*aggs)
-    return df.agg(*aggs)
-
-
-def distinct_counts(df: DataFrame, field: str, group_by: list[str] | None = None) -> DataFrame:
-    """Q14 — exact + approximate cardinality (``stats.calcdistinct``).
-
-    ``approx_count_distinct`` is the 100 TB path (HyperLogLog++, fixed
-    memory per group); exact countDistinct is kept for oracle parity.
-    """
-    aggs = [
-        F.countDistinct(F.col(field)).alias("n_distinct"),
-        F.approx_count_distinct(F.col(field)).alias("n_approx"),
     ]
     if group_by:
         return df.groupBy(*group_by).agg(*aggs)

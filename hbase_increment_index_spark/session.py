@@ -15,6 +15,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory in whole GiB, at least ``1g``:
+    a driver heap the host can back, so the defaults run on the machine
+    they are given."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "hbase_increment_index_spark",
     master: str | None = None,
@@ -23,7 +31,8 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     On a real cluster ``master``/memory come from spark-submit; here we
-    default to ``local[$SPARK_GRAFT_CPUS]``. ``spark.sql.shuffle.partitions``
+    default to ``local[$SPARK_GRAFT_CPUS]`` and a driver heap of half
+    the host's memory (``$SPARK_GRAFT_DRIVER_MEM`` overrides it). ``spark.sql.shuffle.partitions``
     defaults to the core count — at 100 TB you would size this to
     ~(total input / 128 MB) or simply let AQE coalesce from a high
     initial value, which is exactly what
@@ -49,7 +58,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -16,7 +16,9 @@ the batch) — one semantics for both, which is the point of Structured
 Streaming. The persisted index is the compacted CELL STATE (with
 tombstones), so conflict resolution is by cell (ts, seq) and
 micro-batch boundaries can never change the result; the flat document
-table is the derived serving view.
+table is the derived serving view, and the facet and rollup views are
+aggregates of that view as of the commit (as Solr computes facet
+counts from the index at its last commit), not stores kept by delta.
 """
 
 from __future__ import annotations
@@ -25,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
-    DecimalType,
     LongType,
     StringType,
     StructField,
@@ -100,13 +101,14 @@ def start_index_maintenance(
     its touched row keys → only the touched slice of the cell state is
     re-compacted with the batch (the merge_state algebra) → every
     store (state, document serving view, postings, facet and rollup
-    views) is computed once into a staging directory → each staging directory is published by two
-    Hadoop FileSystem renames (store → ``._old``, staging → store).
-    The commit is not atomic across stores, and per store its one
-    non-atomic window is the gap between those two renames, where the
-    store path is absent; the next micro-batch rolls such a store back
-    to ``._old`` before it reads, and a replayed batch over any mix of
-    published and unpublished stores gives the uninterrupted result.
+    views) is computed once into a staging directory → each staging
+    directory is published by two Hadoop FileSystem renames (store →
+    ``._old``, staging → store). The commit is not atomic across
+    stores, and per store its one non-atomic window is the gap between
+    those two renames, where the store path is absent; the next
+    micro-batch rolls such a store back to ``._old`` before it reads,
+    and a replayed batch over any mix of published and unpublished
+    stores gives the uninterrupted result.
     The untouched rows of state, view and postings are still copied
     into each new generation; real deployments would target a
     MERGE-capable table format (Delta/Iceberg) so a commit touches only
@@ -117,19 +119,17 @@ def start_index_maintenance(
     incrementally too (the reference's actual job — keep Solr in sync
     with the row store, reference README.md:5-10): per batch, postings
     for touched row keys are dropped and the touched keys' fresh
-    postings appended (search.inverted.merge_postings) — the tokenizing
-    work is ∝ batch size, never corpus size. Written to
+    postings appended (the search.inverted.merge_postings algebra) —
+    the tokenizing work is ∝ batch size, never corpus size. Written to
     ``index_path + "_postings"``.
 
     With ``facet_field`` set, a materialized facet-count view over that
-    document field is maintained incrementally as well (the aggregate
-    analogue — a Solr facet over the live index): the touched docs'
-    pre-image rows and the current view are journaled to batch-scoped
-    parquet before anything is published, the post-image comes from the
-    batch's documents delta, and the ±delta merges into
-    ``index_path + "_facets"`` via groupBy-sum with zero-count dropout.
-    Work ∝ batch size + facet cardinality. ``rollup_key_field`` /
-    ``rollup_value_field`` maintain a (count, Σvalue) view the same way
+    document field is kept as well (the aggregate analogue — a Solr
+    facet over the index as of its last commit): each commit stages it
+    as a groupBy-count of the documents view it stages, into
+    ``index_path + "_facets"``. Work ∝ the documents view, which the
+    commit already reads and rewrites. ``rollup_key_field`` /
+    ``rollup_value_field`` keep a (count, Σvalue) view the same way
     (``index_path + "_rollup"``).
     """
     spark = cell_stream.sparkSession
@@ -183,12 +183,13 @@ def merge_microbatch(
        fixed schemas, so no read starts a schema-inference job):
        state = untouched rows + the re-compacted touched slice; the
        documents view = old view minus touched ids + the slice's
-       documents; postings and the aggregate views from that documents
-       delta. The union is coalesced to the store's size in split-sized
-       files (``_target_files``), so files never pile up across commits.
+       documents; postings = old postings minus touched ids + the
+       postings of that documents delta; each aggregate view = a
+       groupBy of the new documents view. The union is coalesced to
+       the store's size in split-sized files (``_target_files``), so
+       files never pile up across commits.
     3. Publish each staging directory by Hadoop ``FileSystem`` renames
-       (store → ``<store>._old``, staging → store, drop ``._old``),
-       then delete the aggregate views' journals.
+       (store → ``<store>._old``, staging → store, drop ``._old``).
 
     A crash leaves each store either published or not; the only window
     where a store path is absent is between its two renames, and the
@@ -196,9 +197,9 @@ def merge_microbatch(
     (``_recover_store``), so recovery never re-bootstraps from the
     batch alone. Replaying over any mix of published and unpublished
     stores is exact: state, documents and postings are idempotent by
-    construction, and the aggregate views (facets, rollup) recompute
-    from journals of their pre-images (``._pre_<id>``, ``._base_<id>``)
-    written before anything is published.
+    construction, and the aggregate views (facets, rollup) are a pure
+    function of the documents view being staged, so no journal is
+    needed.
     """
     if rollup_key_field is not None and rollup_value_field is None:
         raise ValueError(
@@ -270,36 +271,13 @@ def merge_microbatch(
         old_docs = spark.read.schema(docs_schema).parquet(index_path)
         new_docs = old_docs.filter(~id_hit).unionByName(docs_delta)
     else:
-        old_docs = None
         new_docs = documents_from_state(new_state, qualifiers)
-
-    # aggregate-view journals, written before any store is published:
-    # the touched docs' pre-image rows and the view as it stands. A
-    # replay after a partial publish reuses them instead of reading
-    # the already-merged documents view (which would net the delta to
-    # zero and lose it).
-    journals = {}
-    for path, field, key_col, value_field in views:
-        if not exists[path] or old_docs is None:
-            continue  # rebuilt from the new documents view below
-        pre_path, base_path = path + f"._pre_{batch_id}", path + f"._base_{batch_id}"
-        if not _committed_state_exists(spark, pre_path):
-            pre = _view_rows(old_docs.filter(id_hit), field, key_col, value_field)
-            pre.write.mode("overwrite").parquet(pre_path)
-        if not _committed_state_exists(spark, base_path):
-            spark.read.schema(_view_schema(key_col, val_t, value_field)).parquet(
-                path
-            ).write.mode("overwrite").parquet(base_path)
-        journals[path] = (pre_path, base_path)
 
     stage(state_path, new_state)
     stage(index_path, new_docs)
 
     if postings_field is not None:
-        from hbase_increment_index_spark.search.inverted import (
-            build_inverted_index,
-            merge_postings,
-        )
+        from hbase_increment_index_spark.search.inverted import build_inverted_index
 
         if exists[postings_path]:
             postings_schema = StructType(
@@ -309,67 +287,29 @@ def merge_microbatch(
                     StructField("tf", LongType()),
                 ]
             )
-            postings = merge_postings(
-                spark.read.schema(postings_schema).parquet(postings_path),
-                docs_delta.select("id", postings_field),
-                None,
-                "id",
-                postings_field,
-                touched_ids=keys,
+            postings = (
+                spark.read.schema(postings_schema)
+                .parquet(postings_path)
+                .filter(~id_hit)
+                .unionByName(build_inverted_index(docs_delta, "id", postings_field))
             )
         else:
             postings = build_inverted_index(new_docs, "id", postings_field)
         stage(postings_path, postings)
 
+    # the aggregate views are a function of the documents view being
+    # staged, so a replay over any mix of published stores recomputes
+    # them exactly; exact decimals for the summed field
     for path, field, key_col, value_field in views:
-        # additive view IVM: view − pre-image + post-image per key, with
-        # zero-count keys dropped; exact decimals for the summed field
-        # so view generations never drift
-        schema = _view_schema(key_col, val_t, value_field)
-        if path in journals:
-            pre_path, base_path = journals[path]
-            neg = [F.col(key_col), (-F.col("n")).alias("n")]
-            if value_field is not None:
-                neg.append((-F.col("sum_value")).alias("sum_value"))
-            parts = (
-                spark.read.schema(schema)
-                .parquet(base_path)
-                .unionByName(_view_rows(docs_delta, field, key_col, value_field))
-                .unionByName(spark.read.schema(schema).parquet(pre_path).select(*neg))
-            )
-        else:
-            parts = _view_rows(new_docs, field, key_col, value_field)
-        aggs = [F.sum("n").alias("n")]
+        aggs = [F.count(F.lit(1)).alias("n")]
         if value_field is not None:
-            aggs.append(F.sum("sum_value").cast(_SUM_T).alias("sum_value"))
-        stage(path, parts.groupBy(key_col).agg(*aggs).filter(F.col("n") > 0))
+            aggs.append(
+                F.sum(F.col(value_field).cast(_SUM_T)).cast(_SUM_T).alias("sum_value")
+            )
+        stage(path, new_docs.groupBy(F.col(field).alias(key_col)).agg(*aggs))
 
     for staging, path in staged:
         _publish(spark, staging, path)
-    for pre_path, base_path in journals.values():
-        _delete(spark, pre_path)
-        _delete(spark, base_path)
-
-
-def _view_schema(key_col: str, key_t, value_field: str | None) -> StructType:
-    """Read schema of an aggregate view or its journals. The sum reads
-    as decimal(38,6): a pre-image summed with ``F.sum`` is stored that
-    wide, and decimal(30,6) files widen to it losslessly."""
-    fields = [StructField(key_col, key_t), StructField("n", LongType())]
-    if value_field is not None:
-        fields.append(StructField("sum_value", DecimalType(38, 6)))
-    return StructType(fields)
-
-
-def _view_rows(
-    docs: DataFrame, field: str, key_col: str, value_field: str | None
-) -> DataFrame:
-    """One (key, n=1[, value]) row per document: the additive unit the
-    aggregate views sum."""
-    cols = [F.col(field).alias(key_col), F.lit(1).cast("long").alias("n")]
-    if value_field is not None:
-        cols.append(F.col(value_field).cast(_SUM_T).alias("sum_value"))
-    return docs.select(*cols)
 
 
 def _target_files(spark: SparkSession, path: str) -> int:
@@ -386,11 +326,6 @@ def _target_files(spark: SparkSession, path: str) -> int:
     )
     split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     return max(1, -(-size // split))
-
-
-def _delete(spark: SparkSession, path: str) -> None:
-    fs, hpath = _fs(spark, path)
-    fs.delete(hpath, True)
 
 
 def _rename(fs, src, dst) -> None:
@@ -416,8 +351,7 @@ def _recover_store(spark: SparkSession, path: str) -> None:
     committed ``._old``; a leftover ``._old`` beside a committed store
     is dropped (a later rename onto it would nest the store inside).
     Staging directories need nothing: the replay of the batch
-    overwrites its own. Journals (``._pre_<id>``, ``._base_<id>``)
-    stay: the replay needs them."""
+    overwrites its own."""
     fs, hpath = _fs(spark, path)
     old = _hpath(spark, path + "._old")
     if not fs.exists(old):

@@ -153,12 +153,6 @@ def test_merge_postings_equals_rebuild(spark):
     again = merge_postings(merged, changed, deleted, "doc_id", "text")
     assert key(again) == key(want)
 
-    # a caller holding the touched ids on the driver gets the same merge
-    by_ids = merge_postings(
-        postings, changed, None, "doc_id", "text", touched_ids=[1, 3, 4]
-    )
-    assert key(by_ids) == key(want)
-
     # queries through the merged index see the new state
     ids = {r["doc_id"] for r in term_match_ids(merged, "doc_id", ["tart"]).collect()}
     assert ids == {1}

@@ -584,13 +584,13 @@ def test_streaming_percolation_matches_batch(spark, sf_dir, tmp_path):
     assert set(alerts) == want and want
 
 
-def test_rollup_replay_after_partial_crash(spark, dirs):
-    """Crash between the index overwrite and the rollup-view write:
-    the replayed batch must REUSE the journaled pre-image/base (not
-    recompute from the already-merged index, which would net the delta
-    to zero and lose it forever). Simulated by reproducing the exact
-    on-disk state such a crash leaves, then replaying."""
-    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
+def test_rollup_replay_after_partial_crash(spark, dirs, monkeypatch):
+    """Crash after the documents view is published and before the
+    rollup view is: the replayed batch must still count the delta (a
+    view maintained by delta against the already-merged documents view
+    would net it to zero and lose it forever), and replaying again
+    after a full success is a no-op."""
+    from hbase_increment_index_spark.streaming import cdc_stream
 
     log_dir, index_path, ckpt = dirs
     b1 = spark.createDataFrame(
@@ -610,42 +610,27 @@ def test_rollup_replay_after_partial_crash(spark, dirs):
         rollup_key_field="cat",
         rollup_value_field="price",
     )
-    merge_microbatch(spark, b1, 0, index_path, **kw)
+    cdc_stream.merge_microbatch(spark, b1, 0, index_path, **kw)
 
-    # --- reproduce the crash point for batch 1: journal written, state
-    # and index already merged, view NOT yet updated
+    # --- crash batch 1 with state and documents published, rollup not
     rollup_path = index_path + "_rollup"
-    touched = b2.select(F.col("row_key").alias("id")).distinct()
-    (
-        spark.read.parquet(index_path)
-        .join(F.broadcast(touched), "id", "left_semi")
-        .groupBy(F.col("cat").alias("key"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("price").cast("decimal(30,6)")).alias("sum_value"),
-        )
-        .write.mode("overwrite")
-        .parquet(rollup_path + "._pre_1")
-    )
-    spark.read.parquet(rollup_path).write.mode("overwrite").parquet(
-        rollup_path + "._base_1"
-    )
-    from hbase_increment_index_spark.cdc.index_builder import (
-        documents_from_state,
-        merge_state,
-    )
+    publish = cdc_stream._publish
+    done = []
 
-    merged = merge_state(spark.read.parquet(index_path + "_state"), b2)
-    merged.write.mode("overwrite").parquet(index_path + "_state2")
-    spark.read.parquet(index_path + "_state2").write.mode("overwrite").parquet(
-        index_path + "_state"
-    )
-    documents_from_state(
-        spark.read.parquet(index_path + "_state"), ["cat", "price"]
-    ).write.mode("overwrite").parquet(index_path)
+    def crash_before_rollup(spark_, staging, path):
+        if path == rollup_path:
+            raise RuntimeError("simulated crash")
+        publish(spark_, staging, path)
+        done.append(path)
+
+    monkeypatch.setattr(cdc_stream, "_publish", crash_before_rollup)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        cdc_stream.merge_microbatch(spark, b2, 1, index_path, **kw)
+    monkeypatch.setattr(cdc_stream, "_publish", publish)
+    assert done == [index_path + "_state", index_path]
 
     # --- replay batch 1 (what Structured Streaming does after the crash)
-    merge_microbatch(spark, b2, 1, index_path, **kw)
+    cdc_stream.merge_microbatch(spark, b2, 1, index_path, **kw)
 
     got = {
         r["key"]: (r["n"], float(r["sum_value"]))
@@ -654,7 +639,7 @@ def test_rollup_replay_after_partial_crash(spark, dirs):
     assert got == {"x": (1, 20.0), "y": (1, 5.0)}  # delta NOT lost
 
     # and a full-success double-replay is still a no-op
-    merge_microbatch(spark, b2, 1, index_path, **kw)
+    cdc_stream.merge_microbatch(spark, b2, 1, index_path, **kw)
     got2 = {
         r["key"]: (r["n"], float(r["sum_value"]))
         for r in spark.read.parquet(rollup_path).collect()
@@ -1086,25 +1071,26 @@ def test_crash_between_publish_renames_rolls_back(
     assert _leftovers(index_path) == []
 
 
-@pytest.mark.parametrize("published", [2, 4])
+@pytest.mark.parametrize("published", [1, 2, 3, 4])
 def test_replay_after_partial_publish(
     spark, dirs, monkeypatch, uninterrupted_fold, published
 ):
     """A crash after ``published`` of the four stores are swapped in
-    (state, documents, postings, facets in publish order; 2 = the
-    documents view is new and the facet view old; 4 = every store
-    published, journals not yet deleted): replaying the batch
-    over the mix of new and old stores gives the uninterrupted result.
-    The facet view needs its journals for this — recomputing its
-    pre-image from an already-published documents view would net the
-    batch's delta to zero."""
+    (state, documents, postings, facets in publish order; 1-3 crash at
+    the publish of the next store, e.g. 2 = the documents view is new
+    and the facet view old; 4 = every store published, the crash
+    before the streaming checkpoint commits): replaying the batch over
+    the mix of new and old stores gives the uninterrupted result. The
+    facet view is recomputed from the documents view being staged, so
+    an already-published documents view cannot net the batch's delta
+    to zero."""
     from hbase_increment_index_spark.streaming import cdc_stream
 
     _, index_path, _ = dirs
     b1, b2 = _fold_batches(spark)
     cdc_stream.merge_microbatch(spark, b1, 0, index_path, **_FOLD_KW)
 
-    publish, delete = cdc_stream._publish, cdc_stream._delete
+    publish = cdc_stream._publish
     done = []
 
     def crash_after_n(spark_, staging, path):
@@ -1113,17 +1099,13 @@ def test_replay_after_partial_publish(
         publish(spark_, staging, path)
         done.append(path)
 
-    def crash_on_journal(spark_, path):
-        if "._pre_" in path or "._base_" in path:
-            raise RuntimeError("simulated crash")
-        delete(spark_, path)
-
     monkeypatch.setattr(cdc_stream, "_publish", crash_after_n)
-    monkeypatch.setattr(cdc_stream, "_delete", crash_on_journal)
-    with pytest.raises(RuntimeError, match="simulated crash"):
+    if published < len(_STORES):
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            cdc_stream.merge_microbatch(spark, b2, 1, index_path, **_FOLD_KW)
+    else:
         cdc_stream.merge_microbatch(spark, b2, 1, index_path, **_FOLD_KW)
     monkeypatch.setattr(cdc_stream, "_publish", publish)
-    monkeypatch.setattr(cdc_stream, "_delete", delete)
     assert done == [index_path + s for s in _STORES][:published]
 
     cdc_stream.merge_microbatch(spark, b2, 1, index_path, **_FOLD_KW)
@@ -1133,7 +1115,7 @@ def test_replay_after_partial_publish(
 
 #: Spark jobs of one commit into an index with state, postings and facets
 #: (session of conftest.py: AQE off, 8 shuffle partitions)
-COMMIT_JOB_BUDGET = 7
+COMMIT_JOB_BUDGET = 5
 
 
 def test_commit_job_budget_and_single_write_per_store(spark, dirs, monkeypatch):
