@@ -2055,52 +2055,6 @@ def ngram_jaccard_pairs_from_index(
     )
 
 
-def read_cow_shingle_store(
-    spark,
-    shingles_path: str,
-    sizes_path: str | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Adapt the STREAMING COW shingle tables
-    (streaming.merge_microbatch_cow's ``*_shingles_cow`` /
-    ``*_shsizes_cow``, maintained per micro-batch by
-    sinks.merge_upsert_parquet keyed on ``sh`` / ``row_key``) into the
-    (postings, sizes) shapes the store-served pairing functions probe
-    (:func:`incremental_near_dups_from_index`,
-    :func:`ngram_jaccard_pairs_from_index`).
-
-    The COW sink's partition column is ``kb`` = pmod(xxhash64(sh),
-    ITS n_buckets) — the same formula as :func:`shingle_bucket` under
-    a different name and (by default: 64 vs 32) a different modulus.
-    This adapter renames kb → shb so the serve-side ``shb IN (...)``
-    filter lands on the real partition column; the MODULUS CONTRACT
-    stays with the caller: pass the COW sink's ``n_buckets`` to the
-    serve call, or the delta's computed buckets silently miss/mismatch
-    the store's directories (pinned by
-    tests/test_round13_ops.py::test_serve_off_cow_shingle_table)."""
-    postings = spark.read.parquet(shingles_path).select(
-        F.col("row_key").alias("doc"), "sh", F.col("kb").alias("shb")
-    )
-    sizes = None
-    if sizes_path is not None:
-        sizes = spark.read.parquet(sizes_path).select(
-            F.col("row_key").alias("doc"), "n_sh"
-        )
-    return postings, sizes
-
-
-def read_cow_fingerprint_store(spark, fps_path: str) -> DataFrame:
-    """Adapt the streaming COW fingerprint table
-    (streaming.merge_microbatch_cow's ``*_fps_cow``, keyed on ``fp`` so
-    its partition column ``kb`` = pmod(xxhash64(fp), the sink's
-    n_buckets)) into the (doc, fp, fpb) shape
-    :func:`exact_dups_from_index` probes — the fingerprint twin of
-    :func:`read_cow_shingle_store`, with the same caller-side modulus
-    contract: pass the SINK's n_buckets to the probe."""
-    return spark.read.parquet(fps_path).select(
-        F.col("row_key").alias("doc"), "fp", F.col("kb").alias("fpb")
-    )
-
-
 def decontaminate_from_index(
     postings: DataFrame,
     eval_set: DataFrame,
@@ -2323,13 +2277,7 @@ def commit_cluster_state(
         fut_pairs = pool.submit(_build_new_pairs)
         labels_after_del = fut_labels.result()
         new_pairs = fut_pairs.result()
-    out = {
-        "labels": merge_cluster_labels(labels_after_del, new_pairs),
-        # the batch's incident pairs (materialized) — callers
-        # maintaining a pair store COW-style turn these into the
-        # upsert half of the delta (streaming.merge_microbatch_cow)
-        "new_pairs": new_pairs.select("id_a", "id_b"),
-    }
+    out = {"labels": merge_cluster_labels(labels_after_del, new_pairs)}
     if store_pairs is not None:
         touched_doc = touched.withColumnRenamed(id_col, "doc")
         kept_pairs = store_pairs.select("id_a", "id_b").join(

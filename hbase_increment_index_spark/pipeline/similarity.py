@@ -195,8 +195,9 @@ _ASSIGN_EXPR_MEMO: dict = {}
 #: expression tree, so one build serves every call site; rebuilding it
 #: per call paid `dim` py4j round-trips per plane per query (plan-side
 #: only, same class as the catalog's DataFrame memo — every action
-#: still recomputes from the inputs)
+#: still recomputes from the inputs); bounded FIFO
 _PLANE_COL_CACHE: dict = {}
+_PLANE_COL_CAP = 128
 
 
 def _plane_values(plane_idx: int, dim: int, plane_fn: str = "xxhash64") -> list[float]:
@@ -259,6 +260,8 @@ def _plane(plane_idx: int, dim: int, plane_fn: str = "xxhash64") -> Column:
     col = _PLANE_COL_CACHE.get(key)
     if col is None:
         col = F.array(*[F.lit(v) for v in _plane_values(plane_idx, dim, plane_fn)])
+        if len(_PLANE_COL_CACHE) >= _PLANE_COL_CAP:
+            _PLANE_COL_CACHE.pop(next(iter(_PLANE_COL_CACHE)))
         _PLANE_COL_CACHE[key] = col
     return col
 

@@ -1391,9 +1391,7 @@ class StreamCompiler:
         if key not in df.columns:
             raise StreamExprError(f"delete stream lacks key column {key!r}")
         # the COW merge unions the delta with kept rows, so delete rows
-        # must carry the DESTINATION's full schema (null-padded) — the
-        # same shape the streaming sink's vanished-key deletes use
-        # (streaming.merge_microbatch_cow)
+        # must carry the DESTINATION's full schema (null-padded)
         from hbase_increment_index_spark.sinks import read_merged_table
 
         dest_schema = read_merged_table(df.sparkSession, self.sink_paths[dest]).schema

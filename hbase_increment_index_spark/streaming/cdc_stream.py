@@ -26,17 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructField, StructType
 
 from hbase_increment_index_spark.cdc.index_builder import (
     compact_state,
     documents_from_state,
-    merge_state,
+    merge_state,  # noqa: F401 — perfbench/run.py traces cdc_stream.merge_state
 )
 
 CELL_LOG_DDL = (
@@ -109,11 +104,9 @@ def start_index_maintenance(
     micro-batch rolls such a store back to ``._old`` before it reads,
     and a replayed batch over any mix of published and unpublished
     stores gives the uninterrupted result.
-    The untouched rows of state, view and postings are still copied
-    into each new generation; real deployments would target a
-    MERGE-capable table format (Delta/Iceberg) so a commit touches only
-    matching files (``merge_microbatch_cow`` is the dependency-free
-    version of that).
+    The untouched rows of every store are still copied into each new
+    generation; real deployments would target a MERGE-capable table
+    format (Delta/Iceberg) so a commit touches only matching files.
 
     With ``postings_field`` set, the FULL-TEXT index is maintained
     incrementally too (the reference's actual job — keep Solr in sync
@@ -162,6 +155,9 @@ def merge_microbatch(
     facet_field: str | None = None,
     rollup_key_field: str | None = None,
     rollup_value_field: str | None = None,
+    shingle_field: str | None = None,
+    fingerprint_field: str | None = None,
+    cluster_threshold: float | None = None,
 ) -> None:
     """One micro-batch fold — the foreachBatch body of
     ``start_index_maintenance``, module-level so recovery semantics are
@@ -177,7 +173,8 @@ def merge_microbatch(
     not recomputed):
 
     1. Pin the batch (its source is read once) and collect its touched
-       row keys — batch-bounded, the one driver collect of the fold.
+       row keys — batch-bounded, the fold's one driver collect (the
+       cluster fold below adds its own, bounded by the batch's pairs).
     2. Compute every store into ``<store>._staging_<batch_id>``,
        reading only the stores as they stood before the commit (with
        fixed schemas, so no read starts a schema-inference job):
@@ -200,10 +197,28 @@ def merge_microbatch(
     construction, and the aggregate views (facets, rollup) are a pure
     function of the documents view being staged, so no journal is
     needed.
+
+    The dedup serving stores of ``pipeline.dedup`` (its default
+    ``SHINGLE_STORE_BUCKETS`` buckets, 3-gram shingles) fold the same
+    documents delta and are staged, published and replayed the same way:
+
+    - ``shingle_field``: ``<index>_shingles`` (doc, sh, shb),
+      partitioned by ``shb``, and its ``<index>_shsizes`` (doc, n_sh);
+    - ``fingerprint_field``: ``<index>_fps`` (doc, fp, fpb),
+      partitioned by ``fpb``;
+    - ``cluster_threshold`` (needs ``shingle_field``): the near-dup
+      components ``<index>_cc_labels`` (doc, component) and their pair
+      list ``<index>_cc_pairs`` (id_a, id_b) at that n-gram Jaccard
+      threshold (``commit_cluster_state`` over the staged shingles).
     """
     if rollup_key_field is not None and rollup_value_field is None:
         raise ValueError(
             "rollup_key_field requires rollup_value_field (the summed column)"
+        )
+    if cluster_threshold is not None and shingle_field is None:
+        raise ValueError(
+            "cluster_threshold requires shingle_field (the clusters are "
+            "paired from the shingle store)"
         )
     # every later use of the batch reads these blocks, never the source
     batch = batch.localCheckpoint(eager=False)
@@ -221,9 +236,19 @@ def merge_microbatch(
         views.append((facets_path, facet_field, "facet_value", None))
     if rollup_key_field is not None:
         views.append((rollup_path, rollup_key_field, "key", rollup_value_field))
+    shingles_path, shsizes_path, fps_path, labels_path, pairs_path = (
+        index_path + s
+        for s in ("_shingles", "_shsizes", "_fps", "_cc_labels", "_cc_pairs")
+    )
     stores = [state_path, index_path] + [p for p, *_ in views]
     if postings_field is not None:
         stores.append(postings_path)
+    if shingle_field is not None:
+        stores += [shingles_path, shsizes_path]
+    if fingerprint_field is not None:
+        stores.append(fps_path)
+    if cluster_threshold is not None:
+        stores += [labels_path, pairs_path]
     for path in stores:
         _recover_store(spark, path)
     # bootstrap-vs-merge per store is an explicit probe of the _SUCCESS
@@ -232,6 +257,7 @@ def merge_microbatch(
     exists = {path: _committed_state_exists(spark, path) for path in stores}
 
     key_t = batch.schema["row_key"].dataType
+    key_ddl = key_t.simpleString()
     val_t = batch.schema["value"].dataType
     docs_schema = StructType(
         [StructField("id", key_t)] + [StructField(q, val_t) for q in qualifiers]
@@ -239,18 +265,24 @@ def merge_microbatch(
     id_hit = F.col("id").isin(keys)
     staged: list[tuple[str, str]] = []  # (staging, store) in publish order
 
-    def stage(path: str, df: DataFrame) -> None:
+    def read(path: str, schema: StructType | str) -> DataFrame:
+        return spark.read.schema(schema).parquet(path)
+
+    def stage(path: str, df: DataFrame, partition_by: str | None = None) -> None:
         staging = path + f"._staging_{batch_id}"
         if exists[path]:
             df = df.coalesce(_target_files(spark, path))
-        df.write.mode("overwrite").parquet(staging)
+        writer = df.write.mode("overwrite")
+        if partition_by is not None:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(staging)
         staged.append((staging, path))
 
     # state: untouched rows + the touched slice re-compacted with the
     # batch. The slice is pinned as the state write computes it; the
     # documents delta reads it from there.
     if exists[state_path]:
-        state = spark.read.schema(batch.schema).parquet(state_path)
+        state = read(state_path, batch.schema)
         hit = F.col("row_key").isin(keys)
         new_slice = compact_state(
             state.filter(hit).unionByName(batch)
@@ -268,7 +300,7 @@ def merge_microbatch(
         eager=False
     )
     if exists[index_path]:
-        old_docs = spark.read.schema(docs_schema).parquet(index_path)
+        old_docs = read(index_path, docs_schema)
         new_docs = old_docs.filter(~id_hit).unionByName(docs_delta)
     else:
         new_docs = documents_from_state(new_state, qualifiers)
@@ -280,16 +312,8 @@ def merge_microbatch(
         from hbase_increment_index_spark.search.inverted import build_inverted_index
 
         if exists[postings_path]:
-            postings_schema = StructType(
-                [
-                    StructField("term", StringType()),
-                    StructField("id", key_t),
-                    StructField("tf", LongType()),
-                ]
-            )
             postings = (
-                spark.read.schema(postings_schema)
-                .parquet(postings_path)
+                read(postings_path, f"term string, id {key_ddl}, tf bigint")
                 .filter(~id_hit)
                 .unionByName(build_inverted_index(docs_delta, "id", postings_field))
             )
@@ -308,6 +332,58 @@ def merge_microbatch(
             )
         stage(path, new_docs.groupBy(F.col(field).alias(key_col)).agg(*aggs))
 
+    if shingle_field is not None or fingerprint_field is not None:
+        from hbase_increment_index_spark.pipeline import dedup
+
+        # (changed docs, touched ids, id column): each dedup merge drops
+        # every touched id and adds the rows of the changed docs
+        delta = (docs_delta, batch.select(F.col("row_key").alias("id")), "id")
+
+    if shingle_field is not None:
+        if exists[shingles_path]:
+            old = read(shingles_path, f"doc {key_ddl}, sh string, shb bigint")
+            shingles = dedup.merge_shingle_postings(old, *delta, shingle_field)
+        else:
+            shingles = dedup.build_shingle_postings(new_docs, "id", shingle_field)
+        if exists[shsizes_path]:
+            old = read(shsizes_path, f"doc {key_ddl}, n_sh bigint")
+            sizes = dedup.merge_shingle_sizes(old, *delta, shingle_field)
+        else:
+            sizes = dedup.shingle_doc_sizes(shingles)
+        stage(shingles_path, shingles, partition_by="shb")
+        stage(shsizes_path, sizes)
+
+    if fingerprint_field is not None:
+        if exists[fps_path]:
+            old = read(fps_path, f"doc {key_ddl}, fp string, fpb bigint")
+            fps = dedup.merge_fingerprint_store(old, *delta, fingerprint_field)
+        else:
+            fps = dedup.build_fingerprint_store(new_docs, "id", fingerprint_field)
+        stage(fps_path, fps, partition_by="fpb")
+
+    if cluster_threshold is not None:
+        # a pair's Jaccard depends on its two documents alone, so the
+        # staged shingle store serves the fold as the pre-batch one would
+        if exists[labels_path] and exists[pairs_path]:
+            clusters = dedup.commit_cluster_state(
+                read(labels_path, f"doc {key_ddl}, component {key_ddl}"),
+                shingles, sizes, *delta, shingle_field,
+                threshold=cluster_threshold,
+                store_pairs=read(pairs_path, f"id_a {key_ddl}, id_b {key_ddl}"),
+            )
+            labels, pairs = clusters["labels"], clusters["pairs"]
+        else:
+            pairs = (
+                dedup.ngram_jaccard_pairs_from_index(
+                    shingles, sizes, threshold=cluster_threshold
+                )
+                .select("id_a", "id_b")
+                .localCheckpoint(eager=True)
+            )
+            labels = dedup.connected_components(pairs)
+        stage(labels_path, labels)
+        stage(pairs_path, pairs)
+
     for staging, path in staged:
         _publish(spark, staging, path)
 
@@ -317,13 +393,15 @@ def _target_files(spark: SparkSession, path: str) -> int:
     data bytes over Spark's split size (``spark.sql.files.
     maxPartitionBytes``), at least one. Derived from the store's size,
     not from its current file count, so commits can neither pile up
-    small files nor drift towards fewer, larger ones."""
+    small files nor drift towards fewer, larger ones. A partitioned
+    store's files are counted in every partition directory."""
     fs, hpath = _fs(spark, path)
-    size = sum(
-        st.getLen()
-        for st in fs.listStatus(hpath)
-        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
-    )
+    size = 0
+    files = fs.listFiles(hpath, True)
+    while files.hasNext():
+        st = files.next()
+        if not st.getPath().getName().startswith(("_", ".")):
+            size += st.getLen()
     split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     return max(1, -(-size // split))
 
@@ -363,490 +441,6 @@ def _recover_store(spark: SparkSession, path: str) -> None:
         _rename(fs, old, hpath)
     else:
         fs.delete(old, True)
-
-
-def merge_microbatch_cow(
-    spark: SparkSession,
-    batch: DataFrame,
-    batch_id: int,
-    index_path: str,
-    qualifiers: list[str],
-    n_buckets: int = 64,
-    postings_field: str | None = None,
-    shingle_field: str | None = None,
-    shingle_n: int = 3,
-    fingerprint_field: str | None = None,
-    cluster_threshold: float | None = None,
-) -> None:
-    """Copy-on-write micro-batch fold — ``merge_microbatch`` with the
-    full-table rewrite replaced by ``sinks.merge_upsert_parquet``:
-    the cell state and the document serving view both live as
-    hash-bucket-partitioned parquet, and a batch rewrites ONLY the
-    bucket directories containing a touched row key. This is the
-    production shape the plain-rewrite path's docstring promises
-    ("a MERGE-capable table format"), delivered dependency-free:
-    micro-batch cost is ∝ |batch| + impacted buckets, independent of
-    accumulated index size — the reference's deferred-cost contract
-    (README.md:5-10) holds even as the index grows unbounded.
-    ``cluster_threshold`` (r14) additionally folds the near-dup CC
-    LABEL and PAIR stores per batch (requires ``shingle_field`` — see
-    the cluster section below).
-
-    Per batch: (1) read ONLY the touched keys' current cells
-    (broadcast semi-join; bucket pruning applies), (2) re-compact that
-    slice + the batch through the same ``merge_state`` algebra as the
-    rewrite path — out-of-order safety and tombstone retention are
-    code-shared, so the two layouts can never drift — and (3) COW-merge
-    the new slice back. The serving view merges the same way; touched
-    keys whose row is now fully tombstoned become COW deletes.
-    Exactly-once under replay for the same reason as merge_microbatch:
-    re-merging an already-merged slice is idempotent by (ts, seq)."""
-    from hbase_increment_index_spark.sinks import merge_upsert_parquet, read_merged_table
-
-    state_path = index_path + "_state_cow"
-    docs_path = index_path + "_docs_cow"
-    postings_path = index_path + "_postings_cow"
-
-    if batch.isEmpty():
-        return
-    from hbase_increment_index_spark.sinks import merged_table_exists
-
-    touched = batch.select("row_key").distinct()
-    # postings need the touched docs' OLD text (to find terms whose
-    # posting lists shrink) — capture the slice before the docs table
-    # is merged over; batch-bounded, so the checkpoint is tiny
-    old_docs_slice = None
-    _text_fields = [
-        f
-        for f in {postings_field, shingle_field, fingerprint_field}
-        if f is not None
-    ]
-    if _text_fields and merged_table_exists(spark, docs_path):
-        from hbase_increment_index_spark.sinks import read_merged_table as _rmt
-
-        old_docs_slice = (
-            _rmt(spark, docs_path)
-            .join(F.broadcast(touched), "row_key", "left_semi")
-            .select("row_key", *_text_fields)
-            .localCheckpoint(eager=True)
-        )
-    if merged_table_exists(spark, state_path):
-        old_slice = read_merged_table(spark, state_path).join(
-            F.broadcast(touched), "row_key", "left_semi"
-        )
-        new_slice = merge_state(old_slice, batch)
-    else:
-        new_slice = compact_state(batch)
-    # pin the batch-sized slice BEFORE the state overwrite: its lineage
-    # reads the pre-merge state files, which the COW rewrite replaces —
-    # the docs derivation below must not re-execute against vanished parts
-    new_slice = new_slice.localCheckpoint(eager=True)
-    merge_upsert_parquet(spark, state_path, new_slice, "row_key", n_buckets=n_buckets)
-
-    # serving-view delta: docs for touched keys, deletes for touched
-    # keys whose row is now fully tombstoned (documents_from_state
-    # drops them, so they show up only as missing ids)
-    docs_delta = documents_from_state(new_slice, qualifiers).withColumnRenamed(
-        "id", "row_key"
-    )
-    gone = touched.join(
-        F.broadcast(docs_delta.select("row_key")), "row_key", "left_anti"
-    )
-    cols = [c for c in docs_delta.columns if c != "row_key"]
-    delta = docs_delta.withColumn("_del", F.lit(False)).unionByName(
-        gone.select(
-            "row_key",
-            *[F.lit(None).cast(docs_delta.schema[c].dataType).alias(c) for c in cols],
-            F.lit(True).alias("_del"),
-        )
-    )
-    merge_upsert_parquet(
-        spark, docs_path, delta, "row_key", n_buckets=n_buckets, delete_col="_del"
-    )
-
-    if postings_field is not None:
-        # COW postings maintenance, keyed by TERM: the delta is bounded
-        # by the batch's vocabulary, never the index. Touched terms =
-        # terms of the touched docs' old text ∪ new text. For those
-        # terms only: current posting rows are read back (directory
-        # pruning on the term buckets — a ≤n_buckets isin list), rows
-        # of touched DOCS dropped, fresh postings for the new text
-        # appended, and terms whose posting list vanished entirely
-        # become COW deletes (dynamic overwrite cannot empty a key).
-        from hbase_increment_index_spark.search.inverted import build_inverted_index
-        from hbase_increment_index_spark.search.tokenize import tokens
-
-        new_docs_slice = docs_delta.select("row_key", postings_field)
-
-        def _terms(frame: DataFrame) -> DataFrame:
-            return frame.select(
-                F.explode(F.array_distinct(tokens(postings_field))).alias("term")
-            ).distinct()
-
-        touched_terms = _terms(new_docs_slice)
-        if old_docs_slice is not None:
-            touched_terms = touched_terms.unionByName(_terms(old_docs_slice)).distinct()
-        touched_terms = touched_terms.localCheckpoint(eager=True)
-
-        if merged_table_exists(spark, postings_path):
-            tt_kb = [
-                r["kb"]
-                for r in touched_terms.select(
-                    F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("kb")
-                )
-                .distinct()
-                .collect()
-            ]
-            cur = (
-                spark.read.parquet(postings_path)
-                .filter(F.col("kb").isin(tt_kb))
-                .drop("kb")
-                .join(F.broadcast(touched_terms), "term", "left_semi")
-            )
-            kept = cur.join(F.broadcast(touched), "row_key", "left_anti")
-            fresh = build_inverted_index(new_docs_slice, "row_key", postings_field)
-            delta_p = kept.unionByName(fresh.select(*kept.columns))
-        else:
-            from hbase_increment_index_spark.sinks import read_merged_table as _rmt
-
-            delta_p = build_inverted_index(
-                _rmt(spark, docs_path).select("row_key", postings_field),
-                "row_key",
-                postings_field,
-            )
-        vanished = touched_terms.join(
-            F.broadcast(delta_p.select("term").distinct()), "term", "left_anti"
-        )
-        pcols = [c for c in delta_p.columns if c != "term"]
-        delta_p = delta_p.withColumn("_del", F.lit(False)).unionByName(
-            vanished.select(
-                "term",
-                *[
-                    F.lit(None).cast(delta_p.schema[c].dataType).alias(c)
-                    for c in pcols
-                ],
-                F.lit(True).alias("_del"),
-            )
-        )
-        merge_upsert_parquet(
-            spark, postings_path, delta_p, "term", n_buckets=n_buckets, delete_col="_del"
-        )
-
-    if shingle_field is not None:
-        # COW shingle-postings maintenance (the e2s dedup-index store,
-        # folded by the SAME micro-batch as state/docs/postings):
-        # rows (sh, row_key) keyed by shingle. The COW sink's
-        # hash-bucket column is the SAME formula as the e2s store's
-        # (pmod(xxhash64(sh), n)) but under a different name and
-        # modulus — partition column 'kb' with THIS function's
-        # n_buckets (default 64), vs the serve functions' 'shb' with
-        # their own n_buckets (default SHINGLE_STORE_BUCKETS=32). To
-        # serve pairing off the merged table, go through
-        # pipeline.dedup.read_cow_shingle_store (renames kb->shb) and
-        # pass THIS n_buckets to the serve call: the bucket prune is a
-        # pure function of the shingle only under the same modulus.
-        # Touched shingles = old text's ∪ new text's; their buckets
-        # prune the read-back; shingles whose last posting left become
-        # COW deletes. The (row_key, n_sh) sizes side table folds in
-        # the same pass.
-        from hbase_increment_index_spark.pipeline.dedup import shingle_grams
-
-        shingles_path = index_path + "_shingles_cow"
-        shsizes_path = index_path + "_shsizes_cow"
-        new_sh_slice = docs_delta.select("row_key", shingle_field)
-
-        def _sh_postings(frame: DataFrame) -> DataFrame:
-            return frame.select(
-                "row_key",
-                F.explode(shingle_grams(shingle_field, shingle_n)).alias("sh"),
-            ).distinct()
-
-        fresh_s = _sh_postings(new_sh_slice).localCheckpoint(eager=True)
-        touched_sh = fresh_s.select("sh").distinct()
-        if old_docs_slice is not None:
-            touched_sh = touched_sh.unionByName(
-                _sh_postings(old_docs_slice).select("sh")
-            ).distinct()
-        touched_sh = touched_sh.localCheckpoint(eager=True)
-
-        if merged_table_exists(spark, shingles_path):
-            sh_kb = [
-                r["kb"]
-                for r in touched_sh.select(
-                    F.pmod(F.xxhash64("sh"), F.lit(n_buckets)).alias("kb")
-                )
-                .distinct()
-                .collect()
-            ]
-            cur_s = (
-                spark.read.parquet(shingles_path)
-                .filter(F.col("kb").isin(sh_kb))
-                .drop("kb")
-                .join(F.broadcast(touched_sh), "sh", "left_semi")
-            )
-            kept_s = cur_s.join(F.broadcast(touched), "row_key", "left_anti")
-            delta_s = kept_s.unionByName(fresh_s.select(*kept_s.columns))
-        else:
-            from hbase_increment_index_spark.sinks import read_merged_table as _rmt
-
-            delta_s = _sh_postings(
-                _rmt(spark, docs_path).select("row_key", shingle_field)
-            )
-        vanished_s = touched_sh.join(
-            F.broadcast(delta_s.select("sh").distinct()), "sh", "left_anti"
-        )
-        scols = [c for c in delta_s.columns if c != "sh"]
-        delta_s = delta_s.withColumn("_del", F.lit(False)).unionByName(
-            vanished_s.select(
-                "sh",
-                *[
-                    F.lit(None).cast(delta_s.schema[c].dataType).alias(c)
-                    for c in scols
-                ],
-                F.lit(True).alias("_del"),
-            )
-        )
-        merge_upsert_parquet(
-            spark, shingles_path, delta_s, "sh", n_buckets=n_buckets, delete_col="_del"
-        )
-
-        # sizes side table: fresh counts for touched docs; touched docs
-        # with no surviving shingles (incl. deleted rows) COW-delete out
-        fresh_sizes = fresh_s.groupBy("row_key").agg(
-            F.count(F.lit(1)).alias("n_sh")
-        )
-        if merged_table_exists(spark, shsizes_path):
-            gone_sz = touched.join(
-                F.broadcast(fresh_sizes.select("row_key")), "row_key", "left_anti"
-            )
-            delta_sz = fresh_sizes.withColumn("_del", F.lit(False)).unionByName(
-                gone_sz.select(
-                    "row_key",
-                    F.lit(None).cast("long").alias("n_sh"),
-                    F.lit(True).alias("_del"),
-                )
-            )
-        else:
-            from hbase_increment_index_spark.sinks import read_merged_table as _rmt
-
-            delta_sz = (
-                _sh_postings(_rmt(spark, docs_path).select("row_key", shingle_field))
-                .groupBy("row_key")
-                .agg(F.count(F.lit(1)).alias("n_sh"))
-                .withColumn("_del", F.lit(False))
-            )
-        merge_upsert_parquet(
-            spark, shsizes_path, delta_sz, "row_key", n_buckets=n_buckets,
-            delete_col="_del",
-        )
-
-    if fingerprint_field is not None:
-        # COW fingerprint-store maintenance (the e1h exact-dedup store,
-        # folded by the SAME micro-batch): rows (fp, row_key) — one per
-        # live doc — KEYED BY fp, so the partition column kb =
-        # pmod(xxhash64(fp), n_buckets) IS the e1h fpb layout under the
-        # COW sink's column name (read back via
-        # pipeline.dedup.read_cow_fingerprint_store and probe with THIS
-        # n_buckets — the same modulus contract as the shingle store
-        # above). fp is NOT unique (exact duplicates share it), so the
-        # fold follows the shingle discipline: current rows of touched
-        # fps read back through the bucket prune, touched DOCS' rows
-        # dropped, fresh fps appended, fps whose last doc left become
-        # COW deletes. A doc's fp change removes its old row (old fp
-        # captured from the pre-merge docs slice) and adds the new one.
-        from hbase_increment_index_spark.pipeline.text import (
-            fingerprint as _fpr,
-        )
-
-        fps_path = index_path + "_fps_cow"
-        fresh_f = docs_delta.select(
-            _fpr(fingerprint_field).alias("fp"), "row_key"
-        ).localCheckpoint(eager=True)
-        touched_f = fresh_f.select("fp").distinct()
-        if old_docs_slice is not None:
-            touched_f = touched_f.unionByName(
-                old_docs_slice.select(_fpr(fingerprint_field).alias("fp"))
-            ).distinct()
-        touched_f = touched_f.localCheckpoint(eager=True)
-        if merged_table_exists(spark, fps_path):
-            f_kb = [
-                r["kb"]
-                for r in touched_f.select(
-                    F.pmod(F.xxhash64("fp"), F.lit(n_buckets)).alias("kb")
-                )
-                .distinct()
-                .collect()
-            ]
-            cur_f = (
-                spark.read.parquet(fps_path)
-                .filter(F.col("kb").isin(f_kb))
-                .drop("kb")
-                .join(F.broadcast(touched_f), "fp", "left_semi")
-                .join(F.broadcast(touched), "row_key", "left_anti")
-            )
-            delta_f = cur_f.unionByName(fresh_f.select(*cur_f.columns))
-        else:
-            from hbase_increment_index_spark.sinks import (
-                read_merged_table as _rmt,
-            )
-
-            delta_f = _rmt(spark, docs_path).select(
-                _fpr(fingerprint_field).alias("fp"), "row_key"
-            )
-        vanished_f = touched_f.join(
-            F.broadcast(delta_f.select("fp").distinct()), "fp", "left_anti"
-        )
-        fcols = [c for c in delta_f.columns if c != "fp"]
-        delta_f = delta_f.withColumn("_del", F.lit(False)).unionByName(
-            vanished_f.select(
-                "fp",
-                *[
-                    F.lit(None).cast(delta_f.schema[c].dataType).alias(c)
-                    for c in fcols
-                ],
-                F.lit(True).alias("_del"),
-            )
-        )
-        merge_upsert_parquet(
-            spark, fps_path, delta_f, "fp", n_buckets=n_buckets, delete_col="_del"
-        )
-
-    if cluster_threshold is not None:
-        # COW near-dup CLUSTER maintenance (the CC label + pair stores,
-        # folded by the SAME micro-batch): labels (doc, component) keyed
-        # by doc, pairs (id_a, id_b) keyed by a composed pk. The fold is
-        # pipeline.dedup.commit_cluster_state — delete-then-merge over
-        # the COW shingle store just merged above (post-merge store
-        # minus touched ≡ pre-merge store minus touched, so ordering
-        # after the shingle merge is exact), with the PERSISTED pair
-        # store serving the delete step's survivor re-pairing (two
-        # broadcast semi-joins, zero pairing jobs) and the batch's
-        # incident pairs folding into both tables. Per-batch cost: the
-        # delta pairing ∝ |batch|, plus one label-table-scale streaming
-        # pass for the relabel/delta (broadcast lookups, no shuffle on
-        # the label table); the COW write rewrites only the buckets the
-        # delta touches. Merge ≡ rebuild over the final corpus is
-        # pytest-pinned (tests/test_round14_ops.py).
-        if shingle_field is None:
-            raise ValueError(
-                "cluster_threshold requires shingle_field (the CC fold "
-                "pairs from the COW shingle store)"
-            )
-        from hbase_increment_index_spark.pipeline.dedup import (
-            commit_cluster_state,
-            connected_components,
-            ngram_jaccard_pairs_from_index,
-            read_cow_shingle_store,
-        )
-
-        labels_path = index_path + "_cc_labels_cow"
-        pairs_path = index_path + "_cc_pairs_cow"
-        postings_cc, sizes_cc = read_cow_shingle_store(
-            spark, shingles_path, shsizes_path
-        )
-        pk = F.concat_ws(
-            "\x1f", F.col("id_a").cast("string"), F.col("id_b").cast("string")
-        )
-        if merged_table_exists(spark, labels_path):
-            stored_lab = read_merged_table(spark, labels_path).select(
-                "doc", "component"
-            )
-            stored_prs = read_merged_table(spark, pairs_path).select(
-                "id_a", "id_b"
-            )
-            state = commit_cluster_state(
-                stored_lab,
-                postings_cc,
-                sizes_cc,
-                docs_delta.select("row_key", shingle_field),
-                gone.select("row_key"),
-                "row_key",
-                shingle_field,
-                n=shingle_n,
-                threshold=cluster_threshold,
-                n_buckets=n_buckets,
-                store_pairs=stored_prs,
-            )
-            post = state["labels"].localCheckpoint(eager=True)
-            cmp = stored_lab.select(
-                "doc", F.col("component").alias("_old")
-            ).join(post, "doc", "full_outer")
-            comp_t = post.schema["component"].dataType
-            ups_l = (
-                cmp.filter(
-                    F.col("component").isNotNull()
-                    & (
-                        F.col("_old").isNull()
-                        | (F.col("_old") != F.col("component"))
-                    )
-                )
-                .select("doc", "component")
-                .withColumn("_del", F.lit(False))
-            )
-            dels_l = cmp.filter(
-                F.col("component").isNull() & F.col("_old").isNotNull()
-            ).select(
-                "doc",
-                F.lit(None).cast(comp_t).alias("component"),
-                F.lit(True).alias("_del"),
-            )
-            merge_upsert_parquet(
-                spark, labels_path, ups_l.unionByName(dels_l), "doc",
-                n_buckets=n_buckets, delete_col="_del",
-            )
-            # pair-store delta: every stored pair with a touched
-            # endpoint dies (old identity); the batch's incident pairs
-            # upsert. A pair present on BOTH sides (an update that kept
-            # the similarity) must land as ONE upsert row — dedupe the
-            # delete half against the upsert keys.
-            ups_p = state["new_pairs"].withColumn("_del", F.lit(False))
-            dead_a = stored_prs.join(
-                F.broadcast(touched.withColumnRenamed("row_key", "id_a")),
-                "id_a",
-                "left_semi",
-            )
-            dead_b = stored_prs.join(
-                F.broadcast(touched.withColumnRenamed("row_key", "id_b")),
-                "id_b",
-                "left_semi",
-            )
-            dels_p = (
-                dead_a.unionByName(dead_b)
-                .distinct()
-                .withColumn("pk", pk)
-                .join(
-                    F.broadcast(ups_p.select(pk.alias("pk"))), "pk", "left_anti"
-                )
-                .drop("pk")
-                .withColumn("_del", F.lit(True))
-            )
-            merge_upsert_parquet(
-                spark, pairs_path,
-                ups_p.unionByName(dels_p).withColumn("pk", pk), "pk",
-                n_buckets=n_buckets, delete_col="_del",
-            )
-        else:
-            # bootstrap: pair the CURRENT corpus once from the COW
-            # shingle store (no corpus text in the plan), label it, and
-            # persist both tables
-            pairs0 = (
-                ngram_jaccard_pairs_from_index(
-                    postings_cc, sizes_cc, threshold=cluster_threshold
-                )
-                .select("id_a", "id_b")
-                .localCheckpoint(eager=True)
-            )
-            labels0 = connected_components(pairs0)
-            merge_upsert_parquet(
-                spark, labels_path,
-                labels0.withColumn("_del", F.lit(False)), "doc",
-                n_buckets=n_buckets, delete_col="_del",
-            )
-            merge_upsert_parquet(
-                spark, pairs_path,
-                pairs0.withColumn("pk", pk).withColumn("_del", F.lit(False)),
-                "pk", n_buckets=n_buckets, delete_col="_del",
-            )
 
 
 def sessionized_event_counts(

@@ -332,18 +332,17 @@ def test_ceiling_semantics_diverge_by_contract(spark):
 
 
 def test_serve_off_cow_shingle_table(spark, tmp_path):
-    """The COW->serve adapter (ADVICE r12): a streaming COW shingle
-    table (partition column kb, its OWN n_buckets) adapted through
-    read_cow_shingle_store and probed with the SINK's n_buckets is
-    result-identical to direct pairing. The modulus contract is the
-    caller's: same formula, same n_buckets, or the prune mismatches."""
+    """A shingle store written with a NON-default bucket count and
+    probed with that same n_buckets is result-identical to direct
+    pairing. The modulus contract is the caller's: same formula, same
+    n_buckets, or the prune mismatches."""
     from hbase_increment_index_spark.pipeline.dedup import (
+        build_shingle_postings,
         incremental_near_dups,
         incremental_near_dups_from_index,
-        read_cow_shingle_store,
-        shingle_grams,
+        shingle_doc_sizes,
+        write_shingle_store,
     )
-    from hbase_increment_index_spark.sinks import merge_upsert_parquet
 
     docs = (
         spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -352,23 +351,20 @@ def test_serve_off_cow_shingle_table(spark, tmp_path):
     )
     existing = docs.filter(F.col("row_key").cast("long") % 10 != 0)
     incoming = docs.filter(F.col("row_key").cast("long") % 10 == 0)
-    cow_buckets = 16  # deliberately NOT the serve default (32)
-    postings_rows = existing.select(
-        "row_key", F.explode(shingle_grams("text", 3)).alias("sh")
-    ).distinct()
-    sizes_rows = postings_rows.groupBy("row_key").agg(
-        F.count(F.lit(1)).alias("n_sh")
+    store_buckets = 16  # deliberately NOT the serve default (32)
+    shp = str(tmp_path / "sh")
+    write_shingle_store(
+        build_shingle_postings(existing, "row_key", "text", 3, n_buckets=store_buckets),
+        shp,
     )
-    shp, szp = str(tmp_path / "sh_cow"), str(tmp_path / "sz_cow")
-    merge_upsert_parquet(spark, shp, postings_rows, "sh", n_buckets=cow_buckets)
-    merge_upsert_parquet(spark, szp, sizes_rows, "row_key", n_buckets=cow_buckets)
 
-    store, sizes = read_cow_shingle_store(spark, shp, szp)
+    store = spark.read.parquet(shp)
+    sizes = shingle_doc_sizes(store)
     assert store.columns == ["doc", "sh", "shb"]
-    assert store.agg(F.max("shb")).head()[0] < cow_buckets
+    assert store.agg(F.max("shb")).head()[0] < store_buckets
     served = incremental_near_dups_from_index(
         store, sizes, incoming, "row_key", "text", n=3, threshold=0.30,
-        n_buckets=cow_buckets,  # the sink's modulus, not the default
+        n_buckets=store_buckets,  # the store's modulus, not the default
     )
     direct = incremental_near_dups(
         existing, incoming, "row_key", "text", n=3, threshold=0.30

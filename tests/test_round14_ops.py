@@ -381,11 +381,11 @@ def test_stream_polyfit_recovers_exact_quadratic(spark):
     assert (der["d0"], der["d1"]) == (3.0, 1.0)
 
 
-# ------------------------------------ streaming COW cluster maintenance
+# ---------------------------------------- streaming cluster maintenance
 
 
 def test_cow_cluster_labels_and_pairs_match_rebuild(spark, tmp_path):
-    """merge_microbatch_cow(cluster_threshold=...) maintains the CC
+    """merge_microbatch(cluster_threshold=...) maintains the CC
     label and pair stores per micro-batch: after a bootstrap batch and
     a mixed batch (update that moves a doc between components, insert
     that pairs with a previously unpaired doc, delete that shrinks a
@@ -397,10 +397,7 @@ def test_cow_cluster_labels_and_pairs_match_rebuild(spark, tmp_path):
         connected_components,
         ngram_jaccard_pairs,
     )
-    from hbase_increment_index_spark.sinks import read_merged_table
-    from hbase_increment_index_spark.streaming.cdc_stream import (
-        merge_microbatch_cow,
-    )
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
 
     schema = T.StructType(
         [
@@ -435,19 +432,16 @@ def test_cow_cluster_labels_and_pairs_match_rebuild(spark, tmp_path):
         ("delete", "A", "cf", None, None, ts(7), 12),
     ]
     for i, b in enumerate([b1, b2]):
-        merge_microbatch_cow(
+        merge_microbatch(
             spark,
             spark.createDataFrame(b, schema),
             i,
             base,
             ["name"],
-            n_buckets=8,
             shingle_field="name",
             cluster_threshold=0.30,
         )
-    final_docs = read_merged_table(spark, base + "_docs_cow").select(
-        "row_key", "name"
-    )
+    final_docs = spark.read.parquet(base).select(F.col("id").alias("row_key"), "name")
     want_pairs = {
         (r["id_a"], r["id_b"])
         for r in ngram_jaccard_pairs(
@@ -462,13 +456,13 @@ def test_cow_cluster_labels_and_pairs_match_rebuild(spark, tmp_path):
     }
     got_pairs = {
         (r["id_a"], r["id_b"])
-        for r in read_merged_table(spark, base + "_cc_pairs_cow")
+        for r in spark.read.parquet(base + "_cc_pairs")
         .select("id_a", "id_b")
         .collect()
     }
     got_labels = {
         (r["doc"], r["component"])
-        for r in read_merged_table(spark, base + "_cc_labels_cow")
+        for r in spark.read.parquet(base + "_cc_labels")
         .select("doc", "component")
         .collect()
     }

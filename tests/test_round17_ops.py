@@ -152,6 +152,19 @@ def test_assign_expr_memo_bounded(spark):
     assert len(S._ASSIGN_EXPR_MEMO) <= 32
 
 
+def test_plane_column_memo_bounded(spark):
+    """_PLANE_COL_CACHE is capped (FIFO) like its sibling memos, so a
+    driver serving many planes cannot grow it without bound."""
+    from hbase_increment_index_spark.pipeline import similarity as S
+
+    S._PLANE_COL_CACHE.clear()
+    for i in range(S._PLANE_COL_CAP + 20):
+        S._plane(i, 2, "md5")
+        assert len(S._PLANE_COL_CACHE) <= S._PLANE_COL_CAP
+    assert ("md5", 0, 2) not in S._PLANE_COL_CACHE  # oldest evicted first
+    assert ("md5", S._PLANE_COL_CAP + 19, 2) in S._PLANE_COL_CACHE
+
+
 def test_plane_column_memo(spark):
     """_plane returns the memoized Column for a repeat key and distinct
     Columns for distinct planes; bucketing stays deterministic."""

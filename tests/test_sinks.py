@@ -241,7 +241,7 @@ def test_merge_bootstrap_all_deletes_keeps_table_absent(spark, tmp_path):
 
 
 def test_cow_microbatch_order_convergence(spark, tmp_path):
-    """Interleaving property for the COW micro-batch fold: folding
+    """Interleaving property for the micro-batch fold: folding
     batches A then B must converge to the same table CONTENT as B then
     A, because conflict resolution inside merge_state is by cell
     (ts, seq) — last-writer-wins per key by the seq tiebreak — never by
@@ -249,10 +249,9 @@ def test_cow_microbatch_order_convergence(spark, tmp_path):
     serving view must agree."""
     import datetime as dt
 
-    from hbase_increment_index_spark.sinks import read_merged_table
     from hbase_increment_index_spark.streaming.cdc_stream import (
         CELL_LOG_DDL,
-        merge_microbatch_cow,
+        merge_microbatch,
     )
 
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -276,13 +275,9 @@ def test_cow_microbatch_order_convergence(spark, tmp_path):
     def fold(order, sub):
         base = str(tmp_path / sub)
         for i, b in enumerate(order):
-            merge_microbatch_cow(spark, b, i, base, ["q"], n_buckets=4)
-        state = sorted(
-            map(tuple, read_merged_table(spark, base + "_state_cow").collect())
-        )
-        docs = sorted(
-            map(tuple, read_merged_table(spark, base + "_docs_cow").collect())
-        )
+            merge_microbatch(spark, b, i, base, ["q"])
+        state = sorted(map(tuple, spark.read.parquet(base + "_state").collect()))
+        docs = sorted(map(tuple, spark.read.parquet(base).collect()))
         return state, docs
 
     state_ab, docs_ab = fold([batch_a, batch_b], "ab")

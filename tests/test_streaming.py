@@ -647,19 +647,14 @@ def test_rollup_replay_after_partial_crash(spark, dirs, monkeypatch):
     assert got2 == got
 
 
-def test_cow_microbatch_matches_batch_and_is_cow(spark, dirs):
-    """merge_microbatch_cow over out-of-order batches must serve the
-    same state and documents as a one-shot batch rebuild, while the
-    state table's untouched bucket directories keep their exact files
-    across batches (the copy-on-write contract)."""
-    import os
-
+def test_microbatch_out_of_order_matches_batch(spark, dirs):
+    """merge_microbatch over out-of-order batches must serve the same
+    state and documents as a one-shot batch rebuild."""
     from hbase_increment_index_spark.cdc.index_builder import (
         compact_state,
         documents_from_cells,
     )
-    from hbase_increment_index_spark.sinks import read_merged_table
-    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch_cow
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
 
     _, index_path, _ = dirs
     b1 = [
@@ -675,49 +670,15 @@ def test_cow_microbatch_matches_batch_and_is_cow(spark, dirs):
     b3 = [  # out-of-order straggler: older than b2's overwrite, must lose
         ("put", "A", "cf", "name", "stale", _ts(3), 5),
     ]
-    merge_microbatch_cow(
-        spark, spark.createDataFrame(b1, SCHEMA), 0, index_path, ["name"], n_buckets=8
-    )
-
-    # snapshot of D's untouched bucket before the later batches
-    state_path = index_path + "_state_cow"
-    kb_d = spark.createDataFrame([("D",)], "row_key string").select(
-        F.pmod(F.xxhash64("row_key"), F.lit(8)).alias("kb")
-    ).collect()[0]["kb"]
-    kb_touched = {
-        r["kb"]
-        for r in spark.createDataFrame([("A",), ("B",), ("C",)], "row_key string")
-        .select(F.pmod(F.xxhash64("row_key"), F.lit(8)).alias("kb"))
-        .collect()
-    }
-    assert kb_d not in kb_touched  # fixture sanity: D's bucket stays cold
-
-    def files_of(bucket):
-        d = os.path.join(state_path, f"kb={bucket}")
-        return {
-            f: os.stat(os.path.join(d, f)).st_ino
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        }
-
-    before = files_of(kb_d)
-    merge_microbatch_cow(
-        spark, spark.createDataFrame(b2, SCHEMA), 1, index_path, ["name"], n_buckets=8
-    )
-    merge_microbatch_cow(
-        spark, spark.createDataFrame(b3, SCHEMA), 2, index_path, ["name"], n_buckets=8
-    )
-    assert files_of(kb_d) == before  # D's bucket never rewritten
+    for i, b in enumerate([b1, b2, b3]):
+        merge_microbatch(spark, spark.createDataFrame(b, SCHEMA), i, index_path, ["name"])
 
     all_cells = spark.createDataFrame(b1 + b2 + b3, SCHEMA)
     want_docs = {
         (r["id"], r["name"])
         for r in documents_from_cells(all_cells, ["name"]).collect()
     }
-    got_docs = {
-        (r["row_key"], r["name"])
-        for r in read_merged_table(spark, index_path + "_docs_cow").collect()
-    }
+    got_docs = {(r["id"], r["name"]) for r in spark.read.parquet(index_path).collect()}
     assert got_docs == want_docs == {("A", "v2"), ("C", "c1"), ("D", "d1")}
 
     want_state = {
@@ -728,91 +689,19 @@ def test_cow_microbatch_matches_batch_and_is_cow(spark, dirs):
     }
     got_state = {
         tuple(r)
-        for r in read_merged_table(spark, state_path)
+        for r in spark.read.parquet(index_path + "_state")
         .select("row_key", "family", "qualifier", "op", "value", "seq")
         .collect()
     }
     assert got_state == want_state
 
 
-def test_cow_microbatch_replay_is_idempotent(spark, dirs):
-    """Replaying an already-merged micro-batch (the crash-between-
-    sink-and-checkpoint case) through the COW path must be a no-op —
-    same (ts, seq) conflict resolution as the rewrite path."""
-    from hbase_increment_index_spark.sinks import read_merged_table
-    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch_cow
-
-    _, index_path, _ = dirs
-    b1 = [("put", "A", "cf", "name", "v1", _ts(1), 1)]
-    b2 = [
-        ("put", "A", "cf", "name", "v2", _ts(5), 10),
-        ("put", "B", "cf", "name", "b1", _ts(6), 11),
-    ]
-    for i, b in enumerate([b1, b2, b2]):  # b2 delivered twice
-        merge_microbatch_cow(
-            spark, spark.createDataFrame(b, SCHEMA), i, index_path, ["name"], n_buckets=4
-        )
-    got = {
-        (r["row_key"], r["name"])
-        for r in read_merged_table(spark, index_path + "_docs_cow").collect()
-    }
-    assert got == {("A", "v2"), ("B", "b1")}
-
-
-def test_cow_postings_match_fresh_build(spark, dirs):
-    """COW postings maintenance: after out-of-order batches with
-    updates and deletes, the term-bucketed postings table must equal a
-    fresh build over the final document set — including terms whose
-    posting lists vanished entirely (the COW-delete path)."""
-    from hbase_increment_index_spark.search.inverted import build_inverted_index
-    from hbase_increment_index_spark.sinks import read_merged_table
-    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch_cow
-
-    _, index_path, _ = dirs
-    b1 = [
-        ("put", "A", "cf", "name", "apple pie recipe", _ts(1), 1),
-        ("put", "B", "cf", "name", "unique banana bread", _ts(2), 2),
-        ("put", "D", "cf", "name", "cherry tart", _ts(2), 3),
-    ]
-    b2 = [
-        # update A away from 'pie': 'pie' survives nowhere -> vanished term
-        ("put", "A", "cf", "name", "apple cider", _ts(5), 10),
-        # delete B: 'unique', 'banana', 'bread' all vanish
-        ("delete", "B", "cf", None, None, _ts(6), 11),
-        ("put", "C", "cf", "name", "apple strudel", _ts(7), 12),
-    ]
-    for i, b in enumerate([b1, b2]):
-        merge_microbatch_cow(
-            spark,
-            spark.createDataFrame(b, SCHEMA),
-            i,
-            index_path,
-            ["name"],
-            n_buckets=8,
-            postings_field="name",
-        )
-    got = {
-        tuple(r)
-        for r in read_merged_table(spark, index_path + "_postings_cow").collect()
-    }
-    final_docs = read_merged_table(spark, index_path + "_docs_cow").select(
-        "row_key", "name"
-    )
-    want = {
-        tuple(r) for r in build_inverted_index(final_docs, "row_key", "name").collect()
-    }
-    assert got == want
-    terms = {t for (t, *_rest) in got}
-    assert "pie" not in terms and "banana" not in terms  # vanished terms evicted
-    assert {"apple", "cider", "strudel", "cherry", "tart"} <= terms
-
-
 def test_cow_shingle_store_matches_fresh_build_and_serves_pairing(spark, dirs):
-    """COW shingle-store maintenance (r12): after out-of-order batches
-    with updates and deletes, the shingle-bucketed (sh, row_key) table
-    and its (row_key, n_sh) sizes side table must equal a fresh build
+    """Shingle-store maintenance by merge_microbatch: after out-of-order
+    batches with updates and deletes, the shingle-bucketed (doc, sh)
+    store and its (doc, n_sh) sizes side table must equal a fresh build
     over the final document set — including shingles whose last
-    posting vanished — and the merged store must serve exact Jaccard
+    posting vanished — and the folded store must serve exact Jaccard
     pairing (ngram_jaccard_pairs_from_index) identical to the direct
     text form."""
     from pyspark.sql import functions as F
@@ -822,8 +711,7 @@ def test_cow_shingle_store_matches_fresh_build_and_serves_pairing(spark, dirs):
         ngram_jaccard_pairs_from_index,
         shingle_grams,
     )
-    from hbase_increment_index_spark.sinks import read_merged_table
-    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch_cow
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
 
     _, index_path, _ = dirs
     b1 = [
@@ -838,19 +726,22 @@ def test_cow_shingle_store_matches_fresh_build_and_serves_pairing(spark, dirs):
         ("put", "C", "cf", "name", "red apple pie with extra cream", _ts(7), 12),
     ]
     for i, b in enumerate([b1, b2]):
-        merge_microbatch_cow(
+        merge_microbatch(
             spark,
             spark.createDataFrame(b, SCHEMA),
             i,
             index_path,
             ["name"],
-            n_buckets=8,
             shingle_field="name",
         )
-    store = read_merged_table(spark, index_path + "_shingles_cow")
-    sizes = read_merged_table(spark, index_path + "_shsizes_cow")
-    final_docs = read_merged_table(spark, index_path + "_docs_cow").select(
-        "row_key", "name"
+    store = spark.read.parquet(index_path + "_shingles").select(
+        "sh", F.col("doc").alias("row_key")
+    )
+    sizes = spark.read.parquet(index_path + "_shsizes").select(
+        F.col("doc").alias("row_key"), "n_sh"
+    )
+    final_docs = spark.read.parquet(index_path).select(
+        F.col("id").alias("row_key"), "name"
     )
     want_store = {
         tuple(r)
@@ -891,22 +782,18 @@ def test_cow_shingle_store_matches_fresh_build_and_serves_pairing(spark, dirs):
 def test_cow_fingerprint_store_matches_fresh_build_and_serves_exact_dedup(
     spark, dirs
 ):
-    """COW fingerprint-store maintenance (r13): after out-of-order
-    batches with an fp-changing update, a delete, and exact-duplicate
-    inserts, the fp-bucketed (fp, row_key) table must equal a fresh
-    build over the final document set — including fps whose last doc
-    left — and must serve store-served exact dedup
-    (exact_dups_from_index via the kb->fpb adapter) identical to the
+    """Fingerprint-store maintenance by merge_microbatch: after
+    out-of-order batches with an fp-changing update, a delete, and
+    exact-duplicate inserts, the fp-bucketed (doc, fp, fpb) store must
+    equal a fresh build over the final document set — including fps
+    whose last doc left — and must serve store-served exact dedup
+    (exact_dups_from_index with the default buckets) identical to the
     direct fingerprint-groupBy form."""
     from pyspark.sql import functions as F
 
-    from hbase_increment_index_spark.pipeline.dedup import (
-        exact_dups_from_index,
-        read_cow_fingerprint_store,
-    )
+    from hbase_increment_index_spark.pipeline.dedup import exact_dups_from_index
     from hbase_increment_index_spark.pipeline.text import fingerprint
-    from hbase_increment_index_spark.sinks import read_merged_table
-    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch_cow
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
 
     _, index_path, _ = dirs
     b1 = [
@@ -920,18 +807,17 @@ def test_cow_fingerprint_store_matches_fresh_build_and_serves_exact_dedup(
         ("put", "C", "cf", "name", "red apple pie", _ts(7), 12),  # dup of B
     ]
     for i, b in enumerate([b1, b2]):
-        merge_microbatch_cow(
+        merge_microbatch(
             spark,
             spark.createDataFrame(b, SCHEMA),
             i,
             index_path,
             ["name"],
-            n_buckets=8,
             fingerprint_field="name",
         )
-    store = read_cow_fingerprint_store(spark, index_path + "_fps_cow")
-    final_docs = read_merged_table(spark, index_path + "_docs_cow").select(
-        "row_key", "name"
+    store = spark.read.parquet(index_path + "_fps")
+    final_docs = spark.read.parquet(index_path).select(
+        F.col("id").alias("row_key"), "name"
     )
     want = {
         (r["fp"], r["row_key"])
@@ -950,9 +836,7 @@ def test_cow_fingerprint_store_matches_fresh_build_and_serves_exact_dedup(
     )
     served = {
         (r["id_new"], r["canonical_id"])
-        for r in exact_dups_from_index(
-            store, incoming, "row_key", "name", n_buckets=8
-        ).collect()
+        for r in exact_dups_from_index(store, incoming, "row_key", "name").collect()
     }
     assert served == {("Z", "B"), ("Y", "A")}
 
@@ -1161,7 +1045,8 @@ def test_store_file_count_flat_across_commits(spark, dirs):
     """Each commit unions a store's untouched rows with the batch's
     delta; without coalescing back, every commit would add the delta's
     partitions as new files. Over ten commits every store keeps one
-    file per split size of data: one here."""
+    file per split size of data: one here, and one in each ``shb=``
+    directory of the partitioned shingle store."""
     import os
 
     from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
@@ -1179,10 +1064,17 @@ def test_store_file_count_flat_across_commits(spark, dirs):
         ]
     def fold(cells, batch_id):
         batch = spark.createDataFrame(cells, SCHEMA)
-        merge_microbatch(spark, batch, batch_id, index_path, **_FOLD_KW)
+        merge_microbatch(
+            spark, batch, batch_id, index_path, **_FOLD_KW, shingle_field="name"
+        )
+
+    def shingle_files(path):
+        buckets = [d for d in os.listdir(path) if d.startswith("shb=")]
+        return {files(os.path.join(path, d)) for d in buckets}
 
     fold(base, 0)
     counts = []
+    shingle_counts = []
     seq = 1000
     for b in range(1, 11):
         cells = []
@@ -1196,4 +1088,138 @@ def test_store_file_count_flat_across_commits(spark, dirs):
         cells.append(("delete", f"k{(b * 11) % 64:03d}", "cf", None, None, _ts(3), seq))
         fold(cells, b)
         counts.append({s: files(index_path + s) for s in _STORES})
+        shingle_counts.append(shingle_files(index_path + "_shingles"))
     assert counts == [{s: 1 for s in _STORES}] * len(counts)
+    assert shingle_counts == [{1}] * len(shingle_counts)
+
+
+# --------------------------------------------------------------------------
+# the dedup stores on the same commit
+
+_DEDUP_KW = dict(
+    qualifiers=["name"],
+    shingle_field="name",
+    fingerprint_field="name",
+    cluster_threshold=0.30,
+)
+_DEDUP_STORES = (
+    "_state", "", "_shingles", "_shsizes", "_fps", "_cc_labels", "_cc_pairs"
+)
+
+
+def _dedup_batches(spark):
+    t_a, t_p, t_x = "a b c d e", "p q r s t", "x y z w v"
+    b1 = [
+        ("put", "A", "cf", "name", t_a, _ts(1), 1),
+        ("put", "B", "cf", "name", t_a, _ts(1), 2),
+        ("put", "C", "cf", "name", t_p, _ts(1), 3),
+        ("put", "E", "cf", "name", t_x, _ts(1), 4),
+        ("put", "G", "cf", "name", "g h i j k", _ts(1), 5),
+    ]
+    b2 = [
+        ("put", "B", "cf", "name", t_p, _ts(5), 10),  # moves to C's component
+        ("put", "F", "cf", "name", t_x, _ts(6), 11),  # pairs with E
+        ("delete", "A", "cf", None, None, _ts(7), 12),  # A's component empties
+        ("put", "G", "cf", "name", "stale", _ts(0), 13),  # older than G's cell: loses
+    ]
+    return spark.createDataFrame(b1, SCHEMA), spark.createDataFrame(b2, SCHEMA)
+
+
+def _dedup_snapshot(spark, index_path):
+    def rows(suffix, cols):
+        frame = spark.read.parquet(index_path + suffix).select(*cols)
+        return sorted(tuple(r) for r in frame.collect())
+
+    return {
+        "state": rows("_state", SCHEMA_COLS),
+        "docs": rows("", ["id", "name"]),
+        "shingles": rows("_shingles", ["doc", "sh", "shb"]),
+        "shsizes": rows("_shsizes", ["doc", "n_sh"]),
+        "fps": rows("_fps", ["doc", "fp", "fpb"]),
+        "cc_labels": rows("_cc_labels", ["doc", "component"]),
+        "cc_pairs": rows("_cc_pairs", ["id_a", "id_b"]),
+    }
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_dedup_fold(spark, tmp_path_factory):
+    """Every store after folding both dedup batches with no crash."""
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
+
+    index_path = str(tmp_path_factory.mktemp("dedup_fold") / "index")
+    b1, b2 = _dedup_batches(spark)
+    merge_microbatch(spark, b1, 0, index_path, **_DEDUP_KW)
+    merge_microbatch(spark, b2, 1, index_path, **_DEDUP_KW)
+    snap = _dedup_snapshot(spark, index_path)
+    assert [d for d, _ in snap["docs"]] == ["B", "C", "E", "F", "G"]
+    # the deleted A left every per-document store
+    for store in ("shingles", "shsizes", "fps"):
+        assert {r[0] for r in snap[store]} == {"B", "C", "E", "F", "G"}
+    assert snap["cc_labels"] == [("B", "B"), ("C", "B"), ("E", "E"), ("F", "E")]
+    assert snap["cc_pairs"] == [("B", "C"), ("E", "F")]
+    assert _leftovers(index_path) == []
+    return snap
+
+
+@pytest.mark.parametrize("published", [1, 2, 3, 4, 5, 6])
+def test_dedup_stores_replay_after_partial_publish(
+    spark, dirs, monkeypatch, uninterrupted_dedup_fold, published
+):
+    """A crash after ``published`` of the seven stores are swapped in
+    (state, documents, shingles, sizes, fingerprints, cluster labels,
+    cluster pairs in publish order): replaying the batch over the mix
+    of new and old stores gives the uninterrupted result on every
+    store and leaves no ``._old`` or staging directory behind."""
+    from hbase_increment_index_spark.streaming import cdc_stream
+
+    _, index_path, _ = dirs
+    b1, b2 = _dedup_batches(spark)
+    cdc_stream.merge_microbatch(spark, b1, 0, index_path, **_DEDUP_KW)
+
+    publish = cdc_stream._publish
+    done = []
+
+    def crash_after_n(spark_, staging, path):
+        if len(done) == published:
+            raise RuntimeError("simulated crash")
+        publish(spark_, staging, path)
+        done.append(path)
+
+    monkeypatch.setattr(cdc_stream, "_publish", crash_after_n)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        cdc_stream.merge_microbatch(spark, b2, 1, index_path, **_DEDUP_KW)
+    monkeypatch.setattr(cdc_stream, "_publish", publish)
+    assert done == [index_path + s for s in _DEDUP_STORES][:published]
+
+    cdc_stream.merge_microbatch(spark, b2, 1, index_path, **_DEDUP_KW)
+    assert _dedup_snapshot(spark, index_path) == uninterrupted_dedup_fold
+    assert _leftovers(index_path) == []
+
+
+#: Spark jobs of one commit into an index with state, documents and the
+#: shingle, fingerprint and cluster stores (same session as above)
+DEDUP_COMMIT_JOB_BUDGET = 43
+
+
+def test_dedup_commit_job_budget(spark, dirs):
+    """One commit with every dedup store into an existing index stays
+    within its job budget. The cluster fold runs its two legs in
+    threads, which do not inherit the job group, so the commit's jobs
+    are its group's plus every new job outside a group."""
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
+
+    _, index_path, _ = dirs
+    b1, b2 = _dedup_batches(spark)
+    merge_microbatch(spark, b1, 0, index_path, **_DEDUP_KW)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("dedup-commit-job-budget", "one dedup merge_microbatch commit", False)
+    try:
+        merge_microbatch(spark, b2, 1, index_path, **_DEDUP_KW)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = set(tracker.getJobIdsForGroup("dedup-commit-job-budget"))
+    jobs |= set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= DEDUP_COMMIT_JOB_BUDGET
