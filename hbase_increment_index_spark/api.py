@@ -188,8 +188,9 @@ class SecondaryIndex:
         return docs
 
     def attach(self, documents: DataFrame) -> "SecondaryIndex":
-        """Adopt an existing document table (e.g. read back from the
-        index parquet written by cdc.index_builder.write_index).
+        """Adopt an existing document table (e.g. the documents view
+        ``streaming.cdc_stream.merge_microbatch`` keeps at its index
+        path, read back with ``spark.read.parquet``).
         Query-only: further apply_mutations requires the cell state."""
         self._attached_docs = documents
         return self

@@ -46,25 +46,6 @@ def documents_from_cells(cell_log: DataFrame, qualifiers: list[str]) -> DataFram
     )
 
 
-def write_index(
-    df: DataFrame,
-    path: str,
-    key_col: str = "id",
-    partition_by: str | None = None,
-    n_buckets: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write the index table. Repartitioning by the unique key keeps
-    each key in exactly one file (point-lookup locality, merge-friendly);
-    ``partition_by`` adds directory-level pruning for a facet field."""
-    if n_buckets:
-        df = df.repartition(n_buckets, F.col(key_col))
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(path)
-
-
 def compact_state(cell_log: DataFrame) -> DataFrame:
     """The index's merge substrate: latest event per (row_key, family,
     qualifier), INCLUDING row tombstones (deletes carry qualifier NULL,

@@ -99,8 +99,14 @@ def checkpoint_all(*frames: DataFrame) -> list[DataFrame]:
         return [frames[0].localCheckpoint(eager=True)]
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    # the frames' jobs carry the caller's job group and description
+    checkpoint = inheritable_thread_target(frames[0].sparkSession)(
+        lambda f: f.localCheckpoint(eager=True)
+    )
     with ThreadPoolExecutor(max_workers=len(frames)) as pool:
-        return list(pool.map(lambda f: f.localCheckpoint(eager=True), frames))
+        return list(pool.map(checkpoint, frames))
 
 
 def release_checkpoints(spark) -> int:

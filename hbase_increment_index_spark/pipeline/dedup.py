@@ -2272,9 +2272,13 @@ def commit_cluster_state(
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    # the legs' jobs carry the caller's job group and description
+    inherit = inheritable_thread_target(stored.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_labels = pool.submit(_build_labels_after_del)
-        fut_pairs = pool.submit(_build_new_pairs)
+        fut_labels = pool.submit(inherit(_build_labels_after_del))
+        fut_pairs = pool.submit(inherit(_build_new_pairs))
         labels_after_del = fut_labels.result()
         new_pairs = fut_pairs.result()
     out = {"labels": merge_cluster_labels(labels_after_del, new_pairs)}

@@ -417,8 +417,9 @@ class StreamCompiler:
     ):
         self.tables = tables
         self.text_fields = text_fields
-        # destinations the update() decorator may write to: collection
-        # name → parquet path of a sinks.merge_upsert_parquet table.
+        # destinations the update()/delete()/topic() decorators may
+        # write to: collection name → parquet path of a
+        # sinks.merge_upsert_parquet table (one committed generation).
         # Explicit opt-in — a query expression can never write anywhere
         # the caller didn't name.
         self.sink_paths = sink_paths or {}
@@ -1087,10 +1088,11 @@ class StreamCompiler:
     def _op_update(self, call: Call) -> DataFrame:
         """Solr ``update()`` write-back decorator: stream tuples are
         indexed into the destination collection. Here the destination
-        is a :func:`sinks.merge_upsert_parquet` copy-on-write table —
-        the stream language closes the loop onto the same MERGE sink
-        the CDC path uses (S6/S7), so read-your-writes holds on the
-        served view and untouched bucket files stay byte-identical.
+        is a :func:`sinks.merge_upsert_parquet` table — the stream
+        language closes the loop onto a MERGE sink that commits the
+        way the CDC fold's stores do (S6/S7): each update() publishes
+        one new generation of the table, so read-your-writes holds on
+        the served view and no reader sees a half-merged one.
         Destinations must be pre-registered via ``sink_paths``.
 
         Emits the one-row summary tuple Solr's update stream emits:
@@ -1117,13 +1119,7 @@ class StreamCompiler:
         df = self._one_stream(call).localCheckpoint(eager=True)
         key = self._param(call, "key")
         n = df.count()
-        merge_upsert_parquet(
-            df.sparkSession,
-            self.sink_paths[dest],
-            df,
-            key,
-            n_buckets=int(call.params.get("buckets", 64)),
-        )
+        merge_upsert_parquet(df.sparkSession, self.sink_paths[dest], df, key)
         return df.sparkSession.range(1).select(
             F.lit(n).cast("long").alias("batchIndexed")
         )
@@ -1368,11 +1364,10 @@ class StreamCompiler:
         reference's delete path (postDelete → buffered deleteById,
         HbaseSolrIndexCoprocesser.java:55-61 / SolrIndexTools.java:
         105-129). Here the destination is the same
-        :func:`sinks.merge_upsert_parquet` copy-on-write table
-        update() writes to, driven with ``delete_col`` — so
-        update()/delete() close the full add/delete sink pair (S6/S7)
-        inside the expression language, and untouched bucket files
-        stay byte-identical.
+        :func:`sinks.merge_upsert_parquet` table update() writes to,
+        driven with ``delete_col`` — so update()/delete() close the
+        full add/delete sink pair (S6/S7) inside the expression
+        language, each call committing one new generation.
 
         Emits Solr's summary tuple: ``totalIndexed`` (ids deleted).
         EAGER, same contract and localCheckpoint discipline as
@@ -1390,11 +1385,9 @@ class StreamCompiler:
         df = self._one_stream(call)
         if key not in df.columns:
             raise StreamExprError(f"delete stream lacks key column {key!r}")
-        # the COW merge unions the delta with kept rows, so delete rows
+        # the merge unions the delta with kept rows, so delete rows
         # must carry the DESTINATION's full schema (null-padded)
-        from hbase_increment_index_spark.sinks import read_merged_table
-
-        dest_schema = read_merged_table(df.sparkSession, self.sink_paths[dest]).schema
+        dest_schema = df.sparkSession.read.parquet(self.sink_paths[dest]).schema
         if key not in dest_schema.names:
             raise StreamExprError(
                 f"destination {dest!r} has no key column {key!r}"
@@ -1413,12 +1406,7 @@ class StreamCompiler:
         )
         n = batch.count()
         merge_upsert_parquet(
-            batch.sparkSession,
-            self.sink_paths[dest],
-            batch,
-            key,
-            n_buckets=int(call.params.get("buckets", 64)),
-            delete_col="_del",
+            batch.sparkSession, self.sink_paths[dest], batch, key, delete_col="_del"
         )
         return batch.sparkSession.range(1).select(
             F.lit(n).cast("long").alias("totalIndexed")
@@ -1539,9 +1527,10 @@ class StreamCompiler:
                   id="topicId", versionField="ts", fl="...")
 
         State: one (topic_id, _ckpt) row per topic in a
-        merge_upsert_parquet COW table at
+        merge_upsert_parquet table at
         ``sink_paths[checkpointCollection]`` (same sink the update()
-        decorator uses — explicit opt-in, bounded to |topics| rows).
+        decorator uses — explicit opt-in, bounded to |topics| rows);
+        each advance commits one new generation of it.
         Each evaluation pulls rows with versionField strictly greater
         than the stored checkpoint (first pull: everything matching
         ``q``), then advances the checkpoint to the max version pulled;
@@ -1556,8 +1545,8 @@ class StreamCompiler:
         parquet reader); checkpoint read/advance touches the 1-row-
         per-topic state table only."""
         from hbase_increment_index_spark.sinks import (
+            _committed_state_exists,
             merge_upsert_parquet,
-            merged_table_exists,
         )
 
         if len(call.fields) < 2:
@@ -1589,7 +1578,7 @@ class StreamCompiler:
             df = df.filter(parse_query(q, text_fields))
 
         ckpt_val = None
-        if merged_table_exists(spark, ckpt_path):
+        if _committed_state_exists(spark, ckpt_path):
             row = (
                 spark.read.parquet(ckpt_path)
                 .filter(F.col("topic_id") == topic_id)
@@ -1610,7 +1599,7 @@ class StreamCompiler:
             delta = spark.range(1).select(
                 F.lit(topic_id).alias("topic_id"), F.lit(new_max).alias("_ckpt")
             )
-            merge_upsert_parquet(spark, ckpt_path, delta, "topic_id", n_buckets=1)
+            merge_upsert_parquet(spark, ckpt_path, delta, "topic_id")
         return pulled
 
     def _op_knnSearch(self, call: Call) -> DataFrame:  # noqa: N802 (Solr name)

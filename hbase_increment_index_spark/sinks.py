@@ -6,6 +6,11 @@ Parquet is the index/serving format (columnar, pruned); json mirrors a
 Solr response dump; csv for interchange. Layout knobs are the scale
 levers: ``partition_by`` gives directory pruning, ``n_buckets``
 repartitions by key for point-lookup locality.
+
+This module also owns how a table generation is committed (stage, then
+publish by rename, recovered by the next commit): the MERGE sink
+``merge_upsert_parquet`` and every store of the CDC fold
+(``streaming.cdc_stream.merge_microbatch``) commit that way.
 """
 
 from __future__ import annotations
@@ -111,113 +116,154 @@ def merge_upsert_parquet(
     path: str,
     delta: DataFrame,
     key_col: str,
-    n_buckets: int = 64,
     delete_col: str | None = None,
 ) -> None:
-    """Copy-on-write MERGE onto plain parquet — the Delta/Iceberg
-    ``MERGE INTO`` semantics (upsert + optional delete) with zero
-    format dependencies, closing the reference's batched add/delete
-    sink (SolrIndexTools.java:60-63,127-131) into a real table merge:
+    """MERGE (upsert + optional delete) onto a plain parquet table,
+    committed as one new generation: the reference's batched add/delete
+    sink (SolrIndexTools.java:60-63,127-131), whose batch becomes
+    visible at one commit.
 
-    1. the table is hash-bucket partitioned (``kb = pmod(xxhash64(key),
-       n_buckets)`` as a partition directory column) at first write;
-    2. a merge computes the delta's impacted bucket set (a <=n_buckets
-       driver list — bounded, never corpus-sized);
-    3. ONLY those partitions are read back (directory pruning on kb),
-       anti-joined against the delta's keys (delta side broadcast —
-       small by construction in a CDC batch), unioned with the delta's
-       surviving rows;
-    4. the rewrite goes through ``partitionOverwriteMode=dynamic``, so
-       untouched bucket directories are never rewritten — merge cost is
-       ∝ |delta| + |impacted buckets|, not table size. At 100 TB with
-       64k buckets a 1M-row batch touches ~1.5% of the table.
+    The next generation is the table minus every key in ``delta`` plus
+    the delta's upsert rows projected onto the table's columns (a delta
+    column the table lacks is dropped; a table column the delta lacks
+    fails the merge). It is written once into ``<path>._staging`` and
+    published by ``_publish``, the commit every store of the CDC fold
+    uses; a crash mid-publish is rolled back by the next merge. Each
+    merge copies the whole table, and in return a reader never sees a
+    half-written one.
 
     ``delete_col``: optional boolean column in ``delta`` marking rows
     to delete instead of upsert (the S7 delete sink). Rows for a key
     appear at most once in the merged table (last-writer-wins within
     the batch is the caller's contract, as in the reference's batch).
     """
-    kb = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).alias("kb")
-    if not merged_table_exists(spark, path):
-        base = delta if delete_col is None else delta.filter(
-            ~F.coalesce(F.col(delete_col), F.lit(False))
-        ).drop(delete_col)
+    _recover_store(spark, path)
+    exists = _committed_state_exists(spark, path)
+    upserts = delta if delete_col is None else delta.filter(
+        ~F.coalesce(F.col(delete_col), F.lit(False))
+    ).drop(delete_col)
+    if exists:
+        table = spark.read.parquet(path)
+        keys = delta.select(key_col).distinct()
+        kept = table.join(F.broadcast(keys), key_col, "left_anti")
+        merged = kept.unionByName(upserts.select(*kept.columns))
+    else:
         # a data-less bootstrap (empty delta, or a first batch whose
-        # keys are ALL tombstoned) would write only _SUCCESS — then
-        # merged_table_exists() says true but read fails schema
-        # inference, permanently wedging the table. Keep the table
-        # absent until real rows arrive; the one-job probe runs only
-        # on the (once-per-table) bootstrap path.
-        if base.isEmpty():
+        # keys are ALL tombstoned) would commit only _SUCCESS, and every
+        # later read would fail schema inference. Keep the table absent
+        # until real rows arrive; the one-job probe runs only here.
+        if upserts.isEmpty():
             return
-        base.withColumn("kb", kb).write.partitionBy("kb").mode(
-            "overwrite"
-        ).parquet(path)
-        spark.catalog.refreshByPath(path)
-        return
-    delta = delta.withColumn("kb", kb)
-    impacted = [r["kb"] for r in delta.select("kb").distinct().collect()]
-    table = spark.read.parquet(path).filter(F.col("kb").isin(impacted))
-    keys = delta.select(key_col, "kb").distinct()
-    kept = table.join(F.broadcast(keys), [key_col, "kb"], "left_anti")
-    if delete_col is not None:
-        delta = delta.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
-            delete_col
-        )
-    merged = kept.unionByName(delta.select(*kept.columns))
-    # materialize BEFORE the overwrite: (a) Spark refuses to overwrite
-    # a path its plan is still reading (the kept side scans `path`);
-    # (b) we need the surviving bucket set to detect fully-emptied
-    # buckets. The checkpoint holds |delta| + |impacted buckets| rows,
-    # never the table.
-    merged = merged.localCheckpoint(eager=True)
-    # emptied-bucket detection only matters when deletes exist: without
-    # them every impacted bucket retains at least its delta rows, so the
-    # survivors probe (one job) is skipped on the upsert-only path
-    survivors = (
-        set(impacted)
-        if delete_col is None
-        else {r["kb"] for r in merged.select("kb").distinct().collect()}
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.partitionBy("kb").mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # dynamic overwrite only replaces partitions that PRODUCE rows — a
-    # bucket whose every key was deleted writes nothing and would keep
-    # serving stale files; drop those directories through the Hadoop
-    # FileSystem API (works on local paths and HDFS/object stores alike)
-    emptied = [b for b in impacted if b not in survivors]
-    if emptied:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        for b in emptied:
-            p = jvm.org.apache.hadoop.fs.Path(f"{path}/kb={b}")
-            p.getFileSystem(conf).delete(p, True)
-    # the overwrite replaced files behind Spark's cached FileIndex for
-    # this path — invalidate it or the next read fails on vanished parts
+        merged = upserts
+    staging = path + "._staging"
+    _stage(spark, path, staging, merged, exists)
+    _publish(spark, staging, path)
+    # readers that cached this path's file listing must re-list it
     spark.catalog.refreshByPath(path)
 
 
-def merged_table_exists(spark, path: str) -> bool:
-    """Committed-table probe for merge_upsert_parquet layouts, through
-    the Hadoop FileSystem API so it is scheme-agnostic (file://,
-    hdfs://, s3a://) — an ``os.path.exists`` only answers for the
-    driver's local disk. Requires the _SUCCESS marker, so a
-    half-written bootstrap from a crashed job counts as absent."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")))
+# ---------------------------------------------------------------------------
+# The commit protocol: every store of the CDC fold (streaming.cdc_stream)
+# and every merge_upsert_parquet table commits a generation this way —
+# staged into a sibling directory, then published by two renames.
+# ---------------------------------------------------------------------------
 
 
-def read_merged_table(spark, path: str) -> DataFrame:
-    """Serving view of a merge_upsert_parquet table (drops the bucket
-    column; point lookups still prune on kb when the caller filters
-    ``pmod(xxhash64(key), n) = b``)."""
-    return spark.read.parquet(path).drop("kb")
+def _hpath(spark, path: str):
+    return spark._jvm.org.apache.hadoop.fs.Path(path)
+
+
+def _fs(spark, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — scheme-agnostic:
+    file://, hdfs://, s3a://."""
+    hpath = _hpath(spark, path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _committed_state_exists(spark, path: str) -> bool:
+    """True iff a generation was COMMITTED at ``path``.
+
+    Uses Hadoop FileSystem (scheme-agnostic: file://, hdfs://, s3a://)
+    and requires the _SUCCESS marker, so a half-written directory from a
+    crashed write counts as absent while a transient read failure of
+    existing data still surfaces as an error in the caller's read."""
+    fs, _ = _fs(spark, path)
+    return bool(fs.exists(_hpath(spark, path + "/_SUCCESS")))
+
+
+def _target_files(spark, path: str) -> int:
+    """File count for the next generation of a committed store: its
+    data bytes over Spark's split size (``spark.sql.files.
+    maxPartitionBytes``), at least one. Derived from the store's size,
+    not from its current file count, so commits can neither pile up
+    small files nor drift towards fewer, larger ones. A partitioned
+    store's files are counted in every partition directory."""
+    fs, hpath = _fs(spark, path)
+    size = 0
+    files = fs.listFiles(hpath, True)
+    while files.hasNext():
+        st = files.next()
+        if not st.getPath().getName().startswith(("_", ".")):
+            size += st.getLen()
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(1, -(-size // split))
+
+
+def _stage(
+    spark,
+    path: str,
+    staging: str,
+    df: DataFrame,
+    exists: bool,
+    partition_by: str | None = None,
+) -> None:
+    """Write ``df`` as the next generation of ``path`` into
+    ``staging`` (overwriting what a crashed attempt left there). The
+    next generation of a committed store is coalesced to its size in
+    split-sized files (``_target_files``), so files never pile up
+    across commits."""
+    if exists:
+        df = df.coalesce(_target_files(spark, path))
+    writer = df.write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(staging)
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+def _publish(spark, staging: str, path: str) -> None:
+    """Swap a committed staging directory in for ``path``: two renames,
+    then the old generation is dropped. A reader sees the old or the
+    new directory, except between the two renames."""
+    fs, hpath = _fs(spark, path)
+    old = _hpath(spark, path + "._old")
+    if fs.exists(hpath):
+        _rename(fs, hpath, old)
+    _rename(fs, _hpath(spark, staging), hpath)
+    fs.delete(old, True)
+
+
+def _recover_store(spark, path: str) -> None:
+    """Undo what a crashed commit left at ``path``: a store absent
+    between the two renames of ``_publish`` rolls back to its
+    committed ``._old``; a leftover ``._old`` beside a committed store
+    is dropped (a later rename onto it would nest the store inside).
+    Staging directories need nothing: the replay overwrites its own."""
+    fs, hpath = _fs(spark, path)
+    old = _hpath(spark, path + "._old")
+    if not fs.exists(old):
+        return
+    if not _committed_state_exists(spark, path) and _committed_state_exists(
+        spark, path + "._old"
+    ):
+        fs.delete(hpath, True)
+        _rename(fs, old, hpath)
+    else:
+        fs.delete(old, True)
 
 
 def read_results(spark, path: str, fmt: str = "parquet") -> DataFrame:

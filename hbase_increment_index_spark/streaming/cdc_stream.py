@@ -33,6 +33,12 @@ from hbase_increment_index_spark.cdc.index_builder import (
     documents_from_state,
     merge_state,  # noqa: F401 — perfbench/run.py traces cdc_stream.merge_state
 )
+from hbase_increment_index_spark.sinks import (
+    _committed_state_exists,
+    _publish,
+    _recover_store,
+    _stage,
+)
 
 CELL_LOG_DDL = (
     "op string, row_key string, family string, qualifier string, "
@@ -40,28 +46,6 @@ CELL_LOG_DDL = (
 )
 #: exact-decimal type of the rollup view's sums
 _SUM_T = "decimal(30,6)"
-
-
-def _hpath(spark: SparkSession, path: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(path)
-
-
-def _fs(spark: SparkSession, path: str):
-    """(Hadoop FileSystem, Path) for ``path`` — scheme-agnostic:
-    file://, hdfs://, s3a://."""
-    hpath = _hpath(spark, path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _committed_state_exists(spark: SparkSession, path: str) -> bool:
-    """True iff a previous micro-batch COMMITTED state at ``path``.
-
-    Uses Hadoop FileSystem (scheme-agnostic: file://, hdfs://, s3a://)
-    and requires the _SUCCESS marker, so a half-written directory from a
-    crashed overwrite counts as absent while a transient read failure of
-    existing data still surfaces as an error in the caller's read."""
-    fs, _ = _fs(spark, path)
-    return bool(fs.exists(_hpath(spark, path + "/_SUCCESS")))
 
 
 def read_cell_stream(
@@ -183,10 +167,12 @@ def merge_microbatch(
        documents; postings = old postings minus touched ids + the
        postings of that documents delta; each aggregate view = a
        groupBy of the new documents view. The union is coalesced to
-       the store's size in split-sized files (``_target_files``), so
+       the store's size in split-sized files (``sinks._stage``), so
        files never pile up across commits.
     3. Publish each staging directory by Hadoop ``FileSystem`` renames
-       (store → ``<store>._old``, staging → store, drop ``._old``).
+       (store → ``<store>._old``, staging → store, drop ``._old``):
+       ``sinks._publish``, the commit ``sinks.merge_upsert_parquet``
+       uses too.
 
     A crash leaves each store either published or not; the only window
     where a store path is absent is between its two renames, and the
@@ -270,12 +256,7 @@ def merge_microbatch(
 
     def stage(path: str, df: DataFrame, partition_by: str | None = None) -> None:
         staging = path + f"._staging_{batch_id}"
-        if exists[path]:
-            df = df.coalesce(_target_files(spark, path))
-        writer = df.write.mode("overwrite")
-        if partition_by is not None:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(staging)
+        _stage(spark, path, staging, df, exists[path], partition_by)
         staged.append((staging, path))
 
     # state: untouched rows + the touched slice re-compacted with the
@@ -386,61 +367,6 @@ def merge_microbatch(
 
     for staging, path in staged:
         _publish(spark, staging, path)
-
-
-def _target_files(spark: SparkSession, path: str) -> int:
-    """File count for the next generation of a committed store: its
-    data bytes over Spark's split size (``spark.sql.files.
-    maxPartitionBytes``), at least one. Derived from the store's size,
-    not from its current file count, so commits can neither pile up
-    small files nor drift towards fewer, larger ones. A partitioned
-    store's files are counted in every partition directory."""
-    fs, hpath = _fs(spark, path)
-    size = 0
-    files = fs.listFiles(hpath, True)
-    while files.hasNext():
-        st = files.next()
-        if not st.getPath().getName().startswith(("_", ".")):
-            size += st.getLen()
-    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    return max(1, -(-size // split))
-
-
-def _rename(fs, src, dst) -> None:
-    if not fs.rename(src, dst):
-        raise OSError(f"rename {src} -> {dst} failed")
-
-
-def _publish(spark: SparkSession, staging: str, path: str) -> None:
-    """Swap a committed staging directory in for ``path``: two renames,
-    then the old generation is dropped. A reader sees the old or the
-    new directory, except between the two renames."""
-    fs, hpath = _fs(spark, path)
-    old = _hpath(spark, path + "._old")
-    if fs.exists(hpath):
-        _rename(fs, hpath, old)
-    _rename(fs, _hpath(spark, staging), hpath)
-    fs.delete(old, True)
-
-
-def _recover_store(spark: SparkSession, path: str) -> None:
-    """Undo what a crashed commit left at ``path``: a store absent
-    between the two renames of ``_publish`` rolls back to its
-    committed ``._old``; a leftover ``._old`` beside a committed store
-    is dropped (a later rename onto it would nest the store inside).
-    Staging directories need nothing: the replay of the batch
-    overwrites its own."""
-    fs, hpath = _fs(spark, path)
-    old = _hpath(spark, path + "._old")
-    if not fs.exists(old):
-        return
-    if not _committed_state_exists(spark, path) and _committed_state_exists(
-        spark, path + "._old"
-    ):
-        fs.delete(hpath, True)
-        _rename(fs, old, hpath)
-    else:
-        fs.delete(old, True)
 
 
 def sessionized_event_counts(

@@ -87,3 +87,23 @@ def test_zorder_locality_buys_skipping(spark, tmp_path):
     # and x-range queries still prune under z-order too
     zx, _ = files_matching(zpath, "x", 0, 7)
     assert zx < ztot
+
+
+def test_checkpoint_all_jobs_carry_callers_job_group(spark):
+    """checkpoint_all materializes its frames in pool threads; their
+    jobs run in the caller's job group, not outside any group."""
+    from hbase_increment_index_spark.functions.layout import checkpoint_all
+
+    frames = [spark.range(100).withColumn("x", F.col("id") * k) for k in (2, 3)]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("checkpoint-all-group", "checkpoint_all of two frames", False)
+    try:
+        out = checkpoint_all(*frames)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(tracker.getJobIdsForGroup("checkpoint-all-group")) >= 2
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert [f.count() for f in out] == [100, 100]

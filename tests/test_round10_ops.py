@@ -103,9 +103,9 @@ def test_daemon_registers_without_running(spark, tmp_path):
     assert summary[0]["id"] == "d1" and summary[0]["state"] == "stopped"
     d = comp.daemons["d1"]
     assert d.iterations == 0  # registration does NOT run the body
-    from hbase_increment_index_spark.sinks import merged_table_exists
+    from hbase_increment_index_spark.sinks import _committed_state_exists
 
-    assert not merged_table_exists(spark, dest)
+    assert not _committed_state_exists(spark, dest)
 
 
 def test_daemon_iterations_converge_served_view(spark, tmp_path):

@@ -465,7 +465,6 @@ def test_delete_decorator_removes_ids_from_cow_sink(spark, tmp_path):
     from hbase_increment_index_spark.search.streaming_expr import (
         run_stream_expr,
     )
-    from hbase_increment_index_spark.sinks import read_merged_table
 
     docs = spark.createDataFrame(
         [(i, f"text {i}") for i in range(20)], ["doc_id", "text"]
@@ -485,7 +484,7 @@ def test_delete_decorator_removes_ids_from_cow_sink(spark, tmp_path):
         sink_paths=sinks,
     ).collect()
     assert summary[0]["totalIndexed"] == 5
-    served = read_merged_table(spark, path)
+    served = spark.read.parquet(path)
     assert served.count() == 15
     assert served.filter(F.col("doc_id") <= 4).count() == 0
     # idempotent: deleting the same ids again is a no-op on the view
@@ -495,7 +494,7 @@ def test_delete_decorator_removes_ids_from_cow_sink(spark, tmp_path):
         'key="doc_id", buckets=4)',
         sink_paths=sinks,
     ).collect()
-    assert read_merged_table(spark, path).count() == 15
+    assert spark.read.parquet(path).count() == 15
 
 
 def test_drill_equals_direct_rollup_and_plans_one_hash_agg(spark):
@@ -706,7 +705,6 @@ def test_train_update_model_classify_workflow(spark, tmp_path):
     from hbase_increment_index_spark.search.streaming_expr import (
         run_stream_expr,
     )
-    from hbase_increment_index_spark.sinks import read_merged_table
 
     docs = spark.createDataFrame(
         [(i, "spark query" if i % 2 == 0 else "plain prose", 
@@ -724,7 +722,7 @@ def test_train_update_model_classify_workflow(spark, tmp_path):
         'maxIterations=5), key="iteration", buckets=2))',
         sink_paths=sinks,
     ).collect()
-    stored = read_merged_table(spark, path)
+    stored = spark.read.parquet(path)
     assert stored.count() == 5
     # serve: model() pulls the stored tuples; classify applies the
     # highest iteration

@@ -327,8 +327,6 @@ def test_eval_and_executor_block_side_effects(spark, tmp_path):
     """r15 (ADVICE): expressions carried in DATA (eval()/executor()
     task streams) may only read by default — update()/delete()/
     commit()/daemon()/topic() are blocked unless allowWrites=true."""
-    from hbase_increment_index_spark.sinks import read_merged_table
-
     t = spark.createDataFrame([(1, "a")], ["rowkey", "name"])
     dest = str(tmp_path / "mirror")
     exprs = spark.createDataFrame(
@@ -357,7 +355,7 @@ def test_eval_and_executor_block_side_effects(spark, tmp_path):
         sink_paths=sink_paths,
     )
     assert out.collect()[0]["batchIndexed"] == 1
-    assert read_merged_table(spark, dest).count() == 1
+    assert spark.read.parquet(dest).count() == 1
 
 
 def test_analyze_evaluator_runs_chain(spark):

@@ -116,8 +116,8 @@ def test_export_sorted_is_globally_ordered(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Copy-on-write MERGE sink (round 8): Delta-style upsert+delete on plain
-# parquet via hash-bucket partitions + dynamic partition overwrite.
+# MERGE sink (round 8): Delta-style upsert+delete on plain parquet, each
+# merge committed as one new generation (staged, published by rename).
 # ---------------------------------------------------------------------------
 
 
@@ -126,14 +126,8 @@ def _merge_fixture(spark):
     return spark.createDataFrame(rows, "row_key string, value string")
 
 
-def test_merge_upsert_parquet_semantics(spark, tmp_path):
-    from hbase_increment_index_spark.sinks import merge_upsert_parquet, read_merged_table
-
-    path = str(tmp_path / "merged")
-    base = _merge_fixture(spark)
-    merge_upsert_parquet(spark, path, base, "row_key", n_buckets=8)
-
-    delta = spark.createDataFrame(
+def _merge_delta(spark):
+    return spark.createDataFrame(
         [
             ("r3", "UPDATED", False),
             ("r99", "NEW", False),
@@ -141,60 +135,37 @@ def test_merge_upsert_parquet_semantics(spark, tmp_path):
         ],
         "row_key string, value string, is_delete boolean",
     )
-    merge_upsert_parquet(spark, path, delta, "row_key", n_buckets=8, delete_col="is_delete")
 
-    got = {(r["row_key"], r["value"]) for r in read_merged_table(spark, path).collect()}
+
+def _table(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+
+def test_merge_upsert_parquet_semantics(spark, tmp_path):
+    from hbase_increment_index_spark.sinks import merge_upsert_parquet
+
+    path = str(tmp_path / "merged")
+    base = _merge_fixture(spark)
+    merge_upsert_parquet(spark, path, base, "row_key")
+
+    delta = _merge_delta(spark)
+    merge_upsert_parquet(spark, path, delta, "row_key", delete_col="is_delete")
+
+    got = {(r["row_key"], r["value"]) for r in spark.read.parquet(path).collect()}
     expected = {(f"r{i}", f"v{i}") for i in range(40) if i not in (3, 5)}
     expected |= {("r3", "UPDATED"), ("r99", "NEW")}
     assert got == expected
 
 
-def test_merge_is_copy_on_write(spark, tmp_path):
-    """The scale property: a merge touching one key must leave every
-    other bucket directory's files byte-identical and un-rewritten —
-    merge cost ∝ |delta| + impacted buckets, never table size."""
-    import os
-
-    from hbase_increment_index_spark.sinks import merge_upsert_parquet
-
-    path = str(tmp_path / "cow")
-    merge_upsert_parquet(spark, path, _merge_fixture(spark), "row_key", n_buckets=8)
-
-    def snapshot(skip_bucket):
-        files = {}
-        for d in os.listdir(path):
-            if not d.startswith("kb=") or d == f"kb={skip_bucket}":
-                continue
-            for f in os.listdir(os.path.join(path, d)):
-                if f.endswith(".parquet"):
-                    st = os.stat(os.path.join(path, d, f))
-                    files[f"{d}/{f}"] = (st.st_size, st.st_mtime_ns, st.st_ino)
-        return files
-
-    # find r7's bucket the same way the sink does
-    kb = spark.createDataFrame([("r7",)], "row_key string").select(
-        F.pmod(F.xxhash64("row_key"), F.lit(8)).alias("kb")
-    ).collect()[0]["kb"]
-    before = snapshot(kb)
-    delta = spark.createDataFrame([("r7", "TOUCHED")], "row_key string, value string")
-    merge_upsert_parquet(spark, path, delta, "row_key", n_buckets=8)
-    assert snapshot(kb) == before  # untouched buckets: same inodes, same bytes
-    got = dict(
-        (r["row_key"], r["value"]) for r in spark.read.parquet(path).collect()
-    )
-    assert got["r7"] == "TOUCHED" and len(got) == 40
-
-
 def test_merge_emptied_bucket_drops_stale_files(spark, tmp_path):
-    """Deleting EVERY key in a bucket produces no output partition for
-    the dynamic overwrite to replace — the sink must drop the stale
-    directory itself or deleted rows come back from the dead."""
-    from hbase_increment_index_spark.sinks import merge_upsert_parquet, read_merged_table
+    """Deleting EVERY key of one hash group (the keys that a bucketed
+    layout would have stored in one directory) must leave none of them
+    served: deleted rows never come back from the dead."""
+    from hbase_increment_index_spark.sinks import merge_upsert_parquet
 
     path = str(tmp_path / "empty")
     base = _merge_fixture(spark)
-    merge_upsert_parquet(spark, path, base, "row_key", n_buckets=4)
-    # bucket of every key, computed as the sink computes it
+    merge_upsert_parquet(spark, path, base, "row_key")
     rows = base.select(
         "row_key", F.pmod(F.xxhash64("row_key"), F.lit(4)).alias("kb")
     ).collect()
@@ -204,21 +175,20 @@ def test_merge_emptied_bucket_drops_stale_files(spark, tmp_path):
         [(k, None, True) for k in victims],
         "row_key string, value string, is_delete boolean",
     )
-    merge_upsert_parquet(spark, path, delta, "row_key", n_buckets=4, delete_col="is_delete")
-    got = {r["row_key"] for r in read_merged_table(spark, path).collect()}
+    merge_upsert_parquet(spark, path, delta, "row_key", delete_col="is_delete")
+    got = {r["row_key"] for r in spark.read.parquet(path).collect()}
     assert got == {r["row_key"] for r in rows if r["kb"] != target}
 
 
 def test_merge_bootstrap_all_deletes_keeps_table_absent(spark, tmp_path):
     """A first batch whose keys are ALL tombstoned must not write a
-    data-less table (only _SUCCESS, no parquet) — merged_table_exists
-    would then say true while reads fail schema inference, permanently
-    wedging the table. The bootstrap skips the write instead; the
-    table stays absent until real rows arrive."""
+    data-less table (only _SUCCESS, no parquet) — the committed-table
+    probe would then say true while reads fail schema inference,
+    permanently wedging the table. The bootstrap skips the write
+    instead; the table stays absent until real rows arrive."""
     from hbase_increment_index_spark.sinks import (
+        _committed_state_exists,
         merge_upsert_parquet,
-        merged_table_exists,
-        read_merged_table,
     )
 
     path = str(tmp_path / "wedge")
@@ -226,18 +196,135 @@ def test_merge_bootstrap_all_deletes_keeps_table_absent(spark, tmp_path):
         [("r1", None, True), ("r2", None, True)],
         "row_key string, value string, is_delete boolean",
     )
-    merge_upsert_parquet(spark, path, all_deletes, "row_key", n_buckets=4,
-                         delete_col="is_delete")
-    assert not merged_table_exists(spark, path)
+    merge_upsert_parquet(spark, path, all_deletes, "row_key", delete_col="is_delete")
+    assert not _committed_state_exists(spark, path)
     # and a later real bootstrap + merge works normally on the same path
-    merge_upsert_parquet(spark, path, _merge_fixture(spark), "row_key", n_buckets=4)
+    merge_upsert_parquet(spark, path, _merge_fixture(spark), "row_key")
     delta = spark.createDataFrame([("r1", "X", False)],
                                   "row_key string, value string, is_delete boolean")
-    merge_upsert_parquet(spark, path, delta, "row_key", n_buckets=4,
-                         delete_col="is_delete")
+    merge_upsert_parquet(spark, path, delta, "row_key", delete_col="is_delete")
     got = dict((r["row_key"], r["value"])
-               for r in read_merged_table(spark, path).collect())
+               for r in spark.read.parquet(path).collect())
     assert got["r1"] == "X" and len(got) == 40
+
+
+def test_merge_crash_between_publish_renames_rolls_back(spark, tmp_path, monkeypatch):
+    """A crash between the two publish renames leaves the table path
+    absent, its previous generation at ``._old`` and the new one in
+    staging. The next merge rolls the table back to ``._old`` before
+    it reads (not a bootstrap from its delta alone), and the table ends
+    equal to the uninterrupted merges."""
+    import os
+
+    from hbase_increment_index_spark import sinks
+
+    path = str(tmp_path / "crash")
+    sinks.merge_upsert_parquet(spark, path, _merge_fixture(spark), "row_key")
+
+    rename = sinks._rename
+
+    def crash_before_second_rename(fs, src, dst):
+        if src.getName() == "crash._staging":
+            raise RuntimeError("simulated crash")
+        rename(fs, src, dst)
+
+    monkeypatch.setattr(sinks, "_rename", crash_before_second_rename)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        sinks.merge_upsert_parquet(
+            spark, path, _merge_delta(spark), "row_key", delete_col="is_delete"
+        )
+    monkeypatch.setattr(sinks, "_rename", rename)
+    assert not os.path.exists(path)
+    assert os.path.exists(path + "._old/_SUCCESS")
+    assert os.path.exists(path + "._staging/_SUCCESS")
+
+    # the next merge is the retried one, then one more
+    more = spark.createDataFrame([("r7", "LATER")], "row_key string, value string")
+    sinks.merge_upsert_parquet(
+        spark, path, _merge_delta(spark), "row_key", delete_col="is_delete"
+    )
+    sinks.merge_upsert_parquet(spark, path, more, "row_key")
+
+    ref = str(tmp_path / "ref")
+    sinks.merge_upsert_parquet(spark, ref, _merge_fixture(spark), "row_key")
+    sinks.merge_upsert_parquet(
+        spark, ref, _merge_delta(spark), "row_key", delete_col="is_delete"
+    )
+    sinks.merge_upsert_parquet(spark, ref, more, "row_key")
+    assert _table(spark, path) == _table(spark, ref)
+    expected = {f"r{i}": f"v{i}" for i in range(40) if i != 5}
+    expected.update(r3="UPDATED", r99="NEW", r7="LATER")
+    assert _table(spark, ref) == sorted(expected.items())
+    assert sorted(os.listdir(tmp_path)) == ["crash", "ref"]
+
+
+#: Spark jobs of one upsert-with-delete into an existing table (session
+#: of conftest.py): the read's schema inference, the broadcast of the
+#: delta's keys and the one write
+MERGE_JOB_BUDGET = 3
+
+
+def test_merge_job_budget(spark, tmp_path):
+    from hbase_increment_index_spark.sinks import merge_upsert_parquet
+
+    path = str(tmp_path / "budget")
+    merge_upsert_parquet(spark, path, _merge_fixture(spark), "row_key")
+    delta = _merge_delta(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-job-budget", "one merge_upsert_parquet", False)
+    try:
+        merge_upsert_parquet(spark, path, delta, "row_key", delete_col="is_delete")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("merge-job-budget")
+    assert len(jobs) <= MERGE_JOB_BUDGET
+    assert len(_table(spark, path)) == 40
+
+
+def test_merge_never_writes_table_in_place(spark, tmp_path, monkeypatch):
+    """A merge writes only its staging directory; until the publish
+    renames, the table path holds exactly the previous generation's
+    files (same names, sizes and inodes), so a reader never sees a
+    half-written table."""
+    import os
+
+    from pyspark.sql import DataFrameWriter
+
+    from hbase_increment_index_spark import sinks
+
+    path = str(tmp_path / "inplace")
+    sinks.merge_upsert_parquet(spark, path, _merge_fixture(spark), "row_key")
+
+    def files():
+        out = {}
+        for f in os.listdir(path):
+            st = os.stat(os.path.join(path, f))
+            out[f] = (st.st_size, st.st_ino)
+        return out
+
+    before = files()
+    written, at_publish = [], []
+    parquet = DataFrameWriter.parquet
+    publish = sinks._publish
+
+    def recording(self, p, *a, **kw):
+        written.append(p)
+        return parquet(self, p, *a, **kw)
+
+    def checked_publish(spark_, staging, p):
+        at_publish.append(files())
+        publish(spark_, staging, p)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    monkeypatch.setattr(sinks, "_publish", checked_publish)
+    sinks.merge_upsert_parquet(
+        spark, path, _merge_delta(spark), "row_key", delete_col="is_delete"
+    )
+    assert written == [path + "._staging"]
+    assert at_publish == [before]
+    assert files() != before
+    assert len(_table(spark, path)) == 40
 
 
 def test_cow_microbatch_order_convergence(spark, tmp_path):

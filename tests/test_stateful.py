@@ -3,7 +3,6 @@ counts, driven through real micro-batches (file source, availableNow)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from hbase_increment_index_spark.functions.skew import two_phase_agg
@@ -261,89 +260,3 @@ def test_trending_terms_same_epoch_no_double_decay(spark, tmp_path):
     # epoch1 batch1: 3; epoch1 batch2 (gap 0, no decay): 3+1=4;
     # epoch2 (gap 1): 4*0.5+1 = 3
     assert last["spark"] == (3.0, 5)
-
-
-class _FakeValueState:
-    """Minimal stand-in for the state-v2 ValueState handle: exists/
-    get/update over a held tuple — enough to drive the processor's
-    state round-trip without the protobuf-backed runner."""
-
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema, ttlDurationMs=None):  # noqa: N803 (Spark API name)
-        return self.states.setdefault(name, _FakeValueState())
-
-
-def test_transform_with_state_v2_processor_semantics():
-    """State-v2 processor logic, driven directly through a fake state
-    handle. The transformWithStateInPandas RUNNER needs
-    google.protobuf (absent in this container, present on a standard
-    Spark 4 cluster where protobuf is a pyspark install dependency) —
-    the processor's init/handleInputRows/state round-trip and its
-    integer-cents exactness discipline are fully testable without it.
-    This test is environment-agnostic: it runs the processor against a
-    fake handle regardless of protobuf availability; the real-runner
-    end-to-end test below engages only where the runner can start."""
-    import pandas as pd
-
-    from hbase_increment_index_spark.streaming.stateful_v2 import (
-        RunningCountProcessor,
-        running_user_counts_v2,
-    )
-
-    assert callable(running_user_counts_v2)
-
-    proc = RunningCountProcessor()
-    handle = _FakeHandle()
-    proc.init(handle)
-    # micro-batch 1: two rows for user 7
-    out1 = list(
-        proc.handleInputRows((7,), [pd.DataFrame({"value": [1.01, 2.0]})], None)
-    )[0]
-    assert out1.to_dict("records") == [{"user_id": 7, "n": 2, "sum_value": 3.01}]
-    # micro-batch 2: state carried — counts and cents accumulate, and
-    # per-row cents rounding keeps the sum exact across batch splits
-    out2 = list(
-        proc.handleInputRows((7,), [pd.DataFrame({"value": [0.98]})], None)
-    )[0]
-    assert out2.to_dict("records") == [{"user_id": 7, "n": 3, "sum_value": 3.99}]
-    assert handle.states["agg"].get() == (3, 399)
-    proc.close()
-
-
-def test_transform_with_state_v2_real_runner(spark):
-    """End-to-end transformWithStateInPandas through the real state-v2
-    runner — engages only where google.protobuf is importable (the
-    norm on Spark 4 clusters; this container ships without it, so the
-    test records a skip rather than failing the suite either way)."""
-    from hbase_increment_index_spark.streaming.stateful_v2 import (
-        is_available,
-        running_user_counts_v2,
-    )
-
-    if not is_available():
-        pytest.skip("google.protobuf not installed; state-v2 runner cannot start")
-    events = spark.createDataFrame(
-        [(7, 1.01), (7, 2.0), (9, 0.98)], "user_id long, value double"
-    )
-    rows = {
-        r["user_id"]: (r["n"], r["sum_value"])
-        for r in running_user_counts_v2(events).collect()
-    }
-    assert rows[7] == (2, 3.01)
-    assert rows[9] == (1, 0.98)

@@ -927,6 +927,7 @@ def test_crash_between_publish_renames_rolls_back(
     exactly where the uninterrupted fold ends."""
     import os
 
+    from hbase_increment_index_spark import sinks
     from hbase_increment_index_spark.streaming import cdc_stream
 
     _, index_path, _ = dirs
@@ -934,17 +935,17 @@ def test_crash_between_publish_renames_rolls_back(
     cdc_stream.merge_microbatch(spark, b1, 0, index_path, **_FOLD_KW)
 
     target = index_path + store
-    rename = cdc_stream._rename
+    rename = sinks._rename
 
     def crash_before_second_rename(fs, src, dst):
         if src.getName() == os.path.basename(target) + "._staging_1":
             raise RuntimeError("simulated crash")
         rename(fs, src, dst)
 
-    monkeypatch.setattr(cdc_stream, "_rename", crash_before_second_rename)
+    monkeypatch.setattr(sinks, "_rename", crash_before_second_rename)
     with pytest.raises(RuntimeError, match="simulated crash"):
         cdc_stream.merge_microbatch(spark, b2, 1, index_path, **_FOLD_KW)
-    monkeypatch.setattr(cdc_stream, "_rename", rename)
+    monkeypatch.setattr(sinks, "_rename", rename)
 
     assert not os.path.exists(target)
     assert os.path.exists(target + "._old/_SUCCESS")
@@ -1203,23 +1204,19 @@ DEDUP_COMMIT_JOB_BUDGET = 43
 
 def test_dedup_commit_job_budget(spark, dirs):
     """One commit with every dedup store into an existing index stays
-    within its job budget. The cluster fold runs its two legs in
-    threads, which do not inherit the job group, so the commit's jobs
-    are its group's plus every new job outside a group."""
+    within its job budget, counted in the job group set around it: the
+    cluster fold's threads carry the caller's group."""
     from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
 
     _, index_path, _ = dirs
     b1, b2 = _dedup_batches(spark)
     merge_microbatch(spark, b1, 0, index_path, **_DEDUP_KW)
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup("dedup-commit-job-budget", "one dedup merge_microbatch commit", False)
     try:
         merge_microbatch(spark, b2, 1, index_path, **_DEDUP_KW)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = set(tracker.getJobIdsForGroup("dedup-commit-job-budget"))
-    jobs |= set(tracker.getJobIdsForGroup(None)) - before
+    jobs = sc.statusTracker().getJobIdsForGroup("dedup-commit-job-budget")
     assert len(jobs) <= DEDUP_COMMIT_JOB_BUDGET

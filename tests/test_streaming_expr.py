@@ -280,8 +280,6 @@ def test_nodes_single_hop_matches_manual_join(spark, tables):
 def test_update_decorator_merges_into_cow_sink(spark, tables, tmp_path):
     """update() closes the stream language onto the COW MERGE sink:
     read-your-writes on the served view, upsert on re-run."""
-    from hbase_increment_index_spark.sinks import read_merged_table
-
     path = str(tmp_path / "dest")
     sinks = {"nation_mirror": path}
     summary = run_stream_expr(
@@ -291,7 +289,7 @@ def test_update_decorator_merges_into_cow_sink(spark, tables, tmp_path):
         sink_paths=sinks,
     ).collect()
     assert summary[0]["batchIndexed"] == 25
-    served = read_merged_table(spark, path)
+    served = spark.read.parquet(path)
     assert served.count() == 25
     # second update over a filtered slice upserts, never duplicates
     run_stream_expr(
@@ -301,7 +299,7 @@ def test_update_decorator_merges_into_cow_sink(spark, tables, tmp_path):
         '"n_nationkey", "n_name"), key="n_nationkey", buckets=4)',
         sink_paths=sinks,
     ).collect()
-    assert read_merged_table(spark, path).count() == 25
+    assert spark.read.parquet(path).count() == 25
 
 
 def test_update_requires_registered_destination(spark, tables):
@@ -378,7 +376,6 @@ def test_facade_update_through_stream_expr(spark, sf_dir, tmp_path):
     import datetime as dt
 
     from hbase_increment_index_spark.api import SecondaryIndex
-    from hbase_increment_index_spark.sinks import read_merged_table
 
     log = spark.createDataFrame(
         [("put", f"r{i}", "cf", "name", f"v{i}", dt.datetime(2024, 1, 1), i)
@@ -394,7 +391,7 @@ def test_facade_update_through_stream_expr(spark, sf_dir, tmp_path):
         sink_paths={"mirror": dest},
     ).collect()
     assert out[0]["batchIndexed"] == 6
-    assert read_merged_table(spark, dest).count() == 6
+    assert spark.read.parquet(dest).count() == 6
 
 
 def test_no_comma_continuation_restricted_to_as(tables, spark):
