@@ -56,10 +56,31 @@ def cosine(a: Column, b: Column) -> Column:
 #: (Columns are immutable expression trees); bounded FIFO.
 _LIT_VEC_MEMO: dict = {}
 
+#: the py4j gateway the Column memos (_LIT_VEC_MEMO, _PLANE_COL_CACHE,
+#: _ASSIGN_EXPR_MEMO) were built on; see _live_column_memos
+_MEMO_GATEWAY: list = [None]
+
+
+def _live_column_memos() -> None:
+    """Empty the Column memos when the live JVM gateway is not the one
+    they were built on. A memoized Column is a handle to a JVM object:
+    after the driver relaunches its JVM in the same Python process, a
+    stale handle fails with an opaque py4j error, so every memo lookup
+    first checks the gateway identity."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if gateway is not _MEMO_GATEWAY[0]:
+        _LIT_VEC_MEMO.clear()
+        _PLANE_COL_CACHE.clear()
+        _ASSIGN_EXPR_MEMO.clear()
+        _MEMO_GATEWAY[0] = gateway
+
 
 def lit_vector(vec: list[float]) -> Column:
     """A query vector as a literal array column (broadcast by value
     into the codegen'd expression — no join at all)."""
+    _live_column_memos()
     key = tuple(float(x) for x in vec)
     col = _LIT_VEC_MEMO.get(key)
     if col is None:
@@ -256,6 +277,7 @@ def _plane_values(plane_idx: int, dim: int, plane_fn: str = "xxhash64") -> list[
 
 def _plane(plane_idx: int, dim: int, plane_fn: str = "xxhash64") -> Column:
     """The hyperplane as a literal array column (see _plane_values)."""
+    _live_column_memos()
     key = (plane_fn, plane_idx, dim)
     col = _PLANE_COL_CACHE.get(key)
     if col is None:
@@ -618,6 +640,7 @@ def _assign(
         tuple((cid, tuple(map(float, c))) for cid, c in cents),
         dist_decimals,
     )
+    _live_column_memos()
     cached = _ASSIGN_EXPR_MEMO.get(memo_key)
     if cached is None:
 
@@ -678,6 +701,22 @@ def label_cell_centroids(
     )
 
 
+#: internal columns of the assign path (_assign) and of pq_encode's
+#: subspace explode, codebook join and argmin; a carried column with
+#: one of these names would shadow or duplicate it
+_ASSIGN_COLS = ("id", "vec", "cid", "_d")
+_ENCODE_COLS = ("s", "sv", "code", "e", "b", "j", "cw")
+
+
+def _check_carry_cols(fn: str, carry_cols: tuple[str, ...], reserved: set[str]) -> None:
+    clash = sorted(set(carry_cols) & reserved)
+    if clash:
+        raise ValueError(
+            f"{fn}: carry_cols {clash} clash with its internal columns "
+            f"{sorted(reserved)}; rename them before carrying"
+        )
+
+
 def assign_cells(
     embeddings: DataFrame,
     centroids: DataFrame,
@@ -694,7 +733,9 @@ def assign_cells(
     caller that needs the assignment AND the payload — e.g. to feed
     :func:`pq_encode` with ``carry_cols=('cid',)`` — gets both from
     the one zero-shuffle projection instead of an id-keyed join back
-    against its input (guide §2.4)."""
+    against its input (guide §2.4). A carried name must not clash with
+    the assignment's internal columns (``_ASSIGN_COLS``)."""
+    _check_carry_cols("assign_cells", carry_cols, {id_col, *_ASSIGN_COLS})
     vecs = embeddings.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
@@ -903,8 +944,10 @@ def pq_encode(
     then pushes below the aggregate AND the subspace explode, so only
     matching rows are ever encoded (guide §2.4; the r16 form attached
     cid with a post-encode join, which forced a full-corpus encode at
-    serve time and an extra join in every plan).
+    serve time and an extra join in every plan). A carried name must
+    not clash with the encoder's internal columns (``_ENCODE_COLS``).
     """
+    _check_carry_cols("pq_encode", carry_cols, {id_col, *_ENCODE_COLS})
     if dim % m:
         raise ValueError(f"dim={dim} must be divisible by m={m} subspaces")
     w = dim // m

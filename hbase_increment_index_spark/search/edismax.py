@@ -14,7 +14,7 @@ the parser such a deployment serves user-facing search with:
 
 Spark mapping (one lazy plan, oracle-checkable in SQL):
 
-  for each field f:   postings(id, term, tf) ⋈ broadcast(query terms)
+  for each field f:   postings(id, term) filtered term IN (query terms)
                       df_f(term) from the tf aggregate (tiny)
                       w = boost_f · tf · ln(n_docs / df_f)
   union fields        rows (id, term, field, w) — k·|fields| per doc max
@@ -23,7 +23,7 @@ Spark mapping (one lazy plan, oracle-checkable in SQL):
   filter matched ≥ mm; orderBy(score desc, id) limit k
 
 Scale shape: each field contributes one single-column scan whose
-postings are broadcast-filtered to the query terms BEFORE any shuffle,
+postings are filtered to the query terms BEFORE any shuffle,
 so per-query work is proportional to matching postings, never corpus
 size. With materialized per-field postings tables (the Lucene serving
 shape — see ``bm25_topk_from_index``) the corpus scans disappear
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hbase_increment_index_spark.search.tokenize import posting_list
+from hbase_increment_index_spark.search.tokenize import posting_list, query_terms_in
 
 
 def resolve_mm(mm: int | str, n_clauses: int) -> int:
@@ -72,17 +72,13 @@ def edismax_topk(
     percentage strings ("75%"); see :func:`resolve_mm`.
     Deterministic total order: score desc, id asc.
     """
-    spark = corpus.sparkSession
     mm = resolve_mm(mm, len(set(t.lower() for t in query_terms)))
-    terms = spark.createDataFrame(
-        [(t.lower(),) for t in sorted(set(query_terms))], ["term"]
-    )
     # corpus cardinality rides a 1-row broadcast, not a driver count()
     stats = corpus.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
 
     per_field = []
     for field, boost in sorted(field_boosts.items()):
-        hits = posting_list(corpus, id_col, field).join(F.broadcast(terms), "term")
+        hits = posting_list(corpus, id_col, field).filter(query_terms_in(query_terms))
         tf = hits.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
         # postings already collapsed to one row per (doc, term): row
         # count per term == document frequency in THIS field

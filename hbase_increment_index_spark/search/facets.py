@@ -3,7 +3,9 @@
 Solr facets are group-by-count aggregations; Spark's hash aggregate
 computes them with a map-side partial pass, so the shuffle carries one
 row per (partition, group), not per input row — the property that
-keeps these linear-scan cheap at 100 TB.
+keeps these linear-scan cheap at 100 TB. A limit-less
+``facet_field`` orders its buckets with one sort inside a single
+partition, so a served facet runs no range-partitioning sample job.
 """
 
 from __future__ import annotations
@@ -36,11 +38,14 @@ def facet_field(
     row_number over the bucket set, which is already small.
 
     Matching Solr, ``facet.sort`` ALWAYS applies — with no ``limit``
-    the full bucket set still comes back ordered (a downstream orderBy
-    supersedes it; Catalyst eliminates the redundant inner sort), and
-    ``offset`` without ``limit`` skips the first buckets of the ordered
-    set. Unknown ``sort`` values raise instead of silently falling back
-    to index order."""
+    the full bucket set still comes back ordered. It is sorted inside
+    one partition (``coalesce(1).sortWithinPartitions``) rather than by
+    a global ``orderBy``, whose range partitioning runs a sampling job
+    per request; the trade is that the final aggregate and the sort run
+    in one task, so their cost follows the field's cardinality. A
+    downstream orderBy supersedes it. ``offset`` without ``limit``
+    skips the first buckets of the ordered set. Unknown ``sort`` values
+    raise instead of silently falling back to index order."""
     if sort not in ("count", "index"):
         raise ValueError(f"facet.sort must be 'count' or 'index', got {sort!r}")
     if prefix is not None:
@@ -63,7 +68,7 @@ def facet_field(
         return out.drop("_rn")
     if limit is not None:
         return out.orderBy(*order).limit(limit)
-    return out.orderBy(*order)
+    return out.coalesce(1).sortWithinPartitions(*order)
 
 
 def facet_by_group(

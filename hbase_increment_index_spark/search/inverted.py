@@ -10,9 +10,9 @@ classic build-once/query-many trade Solr makes.
 Layout at 100 TB: postings written ``repartitionByRange('term')`` (or
 bucketed by term) so a term lookup is a partition-pruned read of one
 range; document frequency is a second tiny table derivable from the
-first. Query = broadcast the query terms against the postings, then
-semi-join doc ids back to the store — the corpus itself is never
-re-tokenized.
+first. Query = filter the postings by the query terms (a literal
+``term IN (...)`` pushed into the scan), then semi-join doc ids back
+to the store — the corpus itself is never re-tokenized.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hbase_increment_index_spark.search.tokenize import posting_list
+from hbase_increment_index_spark.search.tokenize import posting_list, query_terms_in
 
 
 def build_inverted_index(corpus: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -45,14 +45,11 @@ def term_match_ids(postings: DataFrame, id_col: str, terms: list[str], op: str =
     AND = ids whose distinct matched-term count equals |terms|;
     OR = any posting hit. No corpus scan, no tokenization at query time.
     """
-    terms_norm = sorted({t.lower() for t in terms})
-    spark = postings.sparkSession
-    tdf = spark.createDataFrame([(t,) for t in terms_norm], ["term"])
-    hits = postings.join(F.broadcast(tdf), "term")
+    hits = postings.filter(query_terms_in(terms))
     if op == "or":
         return hits.select(id_col).distinct()
     matched = hits.groupBy(id_col).agg(F.countDistinct("term").alias("_nt"))
-    return matched.filter(F.col("_nt") == len(terms_norm)).select(id_col)
+    return matched.filter(F.col("_nt") == len({t.lower() for t in terms})).select(id_col)
 
 
 def search_with_index(

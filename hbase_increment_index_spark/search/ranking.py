@@ -6,10 +6,10 @@ computation stays in Tungsten codegen and is oracle-checkable in SQL.
 Shape of the plan (and why it scales):
 
   postings(id, term)                    -- explode, no shuffle
-    ⋈ query_terms (broadcast, k rows)   -- semi-filter BEFORE any agg:
-                                        -- only postings for query terms
-                                        -- survive, so the groupBy input
-                                        -- is ~k/|V| of the corpus
+    filter term IN (k query terms)      -- literal predicate BEFORE any
+                                        -- agg: only postings for query
+                                        -- terms survive, so the groupBy
+                                        -- input is ~k/|V| of the corpus
   groupBy(id, term) -> tf               -- map-side partial agg
   ⋈ df(term)  (broadcast, k rows)       -- document frequency per term,
                                         -- computed on the same filtered
@@ -20,18 +20,30 @@ Shape of the plan (and why it scales):
 The only wide exchanges are group-bys on (id, term) and (id) — both
 pre-aggregated map-side. Nothing here is proportional to vocabulary
 size at query time.
+
+The index-served BM25 (``bm25_topk_from_index``) reads materialized
+(term, id, tf) postings instead: the term predicate is pushed into the
+parquet scan, df(term) is ``count(1) over (partition by term)`` on the
+surviving rows (no second aggregate, no broadcast), and the per-doc
+length and (n_docs, avg_dl) rows join in before the (id) aggregate.
+Query terms enter every plan here as literals (``query_terms_in``):
+a request builds no driver-side relation and starts no Python worker.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hbase_increment_index_spark.search.tokenize import posting_list
+from hbase_increment_index_spark.search.tokenize import (
+    literal_rows,
+    posting_list,
+    query_terms_in,
+)
 
 # NOTE: ranking deliberately does NOT fan_out the corpus scan — the
-# broadcast terms-filter drops ~all postings before any aggregation, so
-# tokenize cost is small relative to an extra shuffle (A/B-measured).
+# terms filter drops ~all postings before any aggregation, so tokenize
+# cost is small relative to an extra shuffle (A/B-measured).
 
 
 def tfidf_topk(
@@ -49,16 +61,11 @@ def tfidf_topk(
     the selected top-k set is total-order deterministic (required for
     hash comparison against the oracle and for stable pagination).
     """
-    spark = corpus.sparkSession
     # corpus cardinality rides a 1-row broadcast, not a driver count()
     stats = corpus.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
 
-    terms = spark.createDataFrame(
-        [(t.lower(),) for t in sorted(set(query_terms))], ["term"]
-    )
-
     postings = posting_list(corpus, id_col, text_col)
-    hits = postings.join(F.broadcast(terms), "term")  # filter early
+    hits = postings.filter(query_terms_in(query_terms))  # filter early
 
     # tf feeds two consumers (df_t and the scoring probe) and is
     # deliberately NOT checkpointed: it is query-term-bounded and cheap
@@ -154,12 +161,6 @@ def bm25_scores(
     corpus — prefer it when postings are materialized; ``api.rank``
     does.)
     """
-    spark = corpus.sparkSession
-
-    terms = spark.createDataFrame(
-        [(t.lower(),) for t in sorted(set(query_terms))], ["term"]
-    )
-
     from hbase_increment_index_spark.search.tokenize import tokens
 
     # corpus stats as exact ratios of two counts — order-independent;
@@ -184,7 +185,7 @@ def bm25_scores(
     sized = toked.select(
         F.col(id_col), F.size("_tk").alias("dl"), F.explode("_tk").alias("term")
     )
-    hits = sized.join(F.broadcast(terms), "term")
+    hits = sized.filter(query_terms_in(query_terms))
     tf = (
         hits.groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
@@ -247,14 +248,11 @@ def bm25_topk_from_index(
     derived here with one aggregate over the postings (never a corpus
     scan), which is the correct default for ad-hoc use. The whole
     query is one lazy plan: the scalar (n_docs, avg_dl) row enters via
-    a broadcast cross-join, not a driver collect, and the query-term
-    filter is a broadcast semi-structure so only matching postings
+    a broadcast cross-join, not a driver collect, and the query terms
+    enter as a literal ``term IN (...)`` predicate that a parquet
+    postings scan takes as a pushed filter, so only matching postings
     ever shuffle.
     """
-    spark = postings.sparkSession
-    terms = spark.createDataFrame(
-        [(t.lower(),) for t in sorted(set(query_terms))], ["term"]
-    )
     if doc_len is None:
         doc_len = postings.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     if stats is None:
@@ -262,12 +260,14 @@ def bm25_topk_from_index(
             F.count(F.lit(1)).cast("double").alias("n_docs"),
             (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avg_dl"),
         )
-    hits = postings.join(F.broadcast(terms), "term")
-    # postings are distinct (term, id): row count per term == df
-    df_t = hits.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
+    # postings are distinct (term, id): row count per term == df, so
+    # df rides the pruned hits as a window count — no second aggregate
+    # and no join back
+    hits = postings.filter(query_terms_in(query_terms)).withColumn(
+        "df_t", F.count(F.lit(1)).over(Window.partitionBy("term"))
+    )
     scored = (
-        hits.join(F.broadcast(df_t), "term")
-        .join(doc_len, id_col)
+        hits.join(doc_len, id_col)
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "w",
@@ -424,8 +424,6 @@ def with_rank(df: DataFrame, order: list, rank_alias: str = "rank") -> DataFrame
     The single-partition window is deliberate and safe: it runs on the
     k rows a TakeOrderedAndProject already reduced, never on the corpus.
     """
-    from pyspark.sql import Window
-
     w = Window.orderBy(*order)
     return df.withColumn(rank_alias, F.row_number().over(w))
 
@@ -451,11 +449,10 @@ def rerank_topk(
     Plan shape: the expensive leg is the main BM25 retrieval — the
     candidate head it produces is broadcast-small (reRankDocs rows),
     so the rerank scoring joins against a tiny keyset: the second
-    query's postings are filtered by BOTH the broadcast terms AND the
+    query's postings are filtered by BOTH the query terms AND the
     candidate ids before aggregation. Rerank cost is O(head), never a
     second corpus-wide retrieval.
     """
-    spark = corpus.sparkSession
     head = bm25_topk(
         corpus, id_col, text_col, main_terms, k=rerank_docs,
         score_decimals=score_decimals,
@@ -465,19 +462,16 @@ def rerank_topk(
     # postings, corpus n_docs/avgdl — Solr scores the head with full-
     # index idf), but per-doc tf/dl aggregation restricted to the
     # broadcast candidate head BEFORE the shuffle — the O(head) claim
-    from hbase_increment_index_spark.search.tokenize import posting_list, tokens
+    from hbase_increment_index_spark.search.tokenize import tokens
 
     k1, b = 1.2, 0.75
-    terms = spark.createDataFrame(
-        [(t.lower(),) for t in sorted(set(rerank_terms))], ["term"]
-    )
     head_ids = head.select(id_col)
     doc_len = corpus.select(F.col(id_col), F.size(tokens(text_col)).alias("dl"))
     stats = doc_len.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avg_dl"),
     )
-    hits = posting_list(corpus, id_col, text_col).join(F.broadcast(terms), "term")
+    hits = posting_list(corpus, id_col, text_col).filter(query_terms_in(rerank_terms))
     # df from the term-filtered postings (global): distinct docs per term
     df_t = hits.select(id_col, "term").distinct().groupBy("term").agg(
         F.count(F.lit(1)).alias("df_t")
@@ -540,7 +534,6 @@ def elevation_topk(
     for elevated rows and (1000 − score) for organic ones, rounded;
     total order is (elevated desc, sort_key asc, id asc).
     """
-    spark = corpus.sparkSession
     organic = bm25_topk(
         corpus, id_col, text_col, query_terms, k=organic_pool,
         score_decimals=score_decimals,
@@ -556,9 +549,10 @@ def elevation_topk(
             .limit(k)
         )
     id_type = "string" if isinstance(elevated_ids[0], str) else "long"
-    pinned = spark.createDataFrame(
-        [(d, i + 1) for i, d in enumerate(elevated_ids)],
+    pinned = literal_rows(
+        corpus.sparkSession,
         f"{id_col} {id_type}, elev_pos int",
+        [(d, i + 1) for i, d in enumerate(elevated_ids)],
     )
     n_organic = max(k - len(elevated_ids), 0)
     rest = (

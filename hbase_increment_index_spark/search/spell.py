@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from hbase_increment_index_spark.search.tokenize import tokens
+from hbase_increment_index_spark.search.tokenize import literal_rows, tokens
 
 
 def distinct_postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -67,8 +67,7 @@ def _best_corrections(
 def _spellcheck_core(
     vocab: DataFrame, inputs: list[str], max_dist: int
 ) -> DataFrame:
-    spark = vocab.sparkSession
-    qs = spark.createDataFrame([(t.lower(),) for t in inputs], "input string")
+    qs = literal_rows(vocab.sparkSession, "input string", [(t.lower(),) for t in inputs])
     return _best_corrections(vocab, qs, "input", max_dist).select(
         "input", F.col("term").alias("suggestion"), "dist", "df"
     )
@@ -77,9 +76,10 @@ def _spellcheck_core(
 def _collate_core(
     vocab: DataFrame, toks: DataFrame, id_col: str, inputs: list[str], max_dist: int
 ) -> DataFrame:
-    spark = vocab.sparkSession
-    qs = spark.createDataFrame(
-        [(i, t.lower()) for i, t in enumerate(inputs)], "pos int, input string"
+    qs = literal_rows(
+        vocab.sparkSession,
+        "pos int, input string",
+        [(i, t.lower()) for i, t in enumerate(inputs)],
     )
     best = _best_corrections(vocab, qs, "pos", max_dist).select(
         "pos", F.col("term").alias("corrected")

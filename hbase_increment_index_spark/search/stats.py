@@ -9,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hbase_increment_index_spark.functions.layout import fan_out
 from hbase_increment_index_spark.numeric import exact_avg, exact_std, exact_sum
 
 
@@ -19,10 +18,11 @@ def stats_field(
     """Q13 — min/max/sum/mean/stddev/count/missing for a numeric field,
     optionally per group (Solr ``stats.field=f&stats.facet=g``).
 
-    fan_out: the exact-decimal partial aggregation is the dominant
-    map-side cost; on an under-partitioned scan it would otherwise run
-    inside a single scan task."""
-    df = fan_out(df)
+    The partial aggregation runs inside the scan tasks of ``df``: no
+    repartition is added. A served ``select`` passes the filtered match
+    set, where a fan-out's planning probe and shuffle cost more than the
+    few decimal additions per row it would spread; a caller whose input
+    is a large, under-partitioned scan can repartition it first."""
     c = F.col(field)
     aggs = [
         F.min(c).alias("min_v"),

@@ -83,6 +83,31 @@ def synonym_groups_match(
     return pred, counts
 
 
+def query_terms_in(terms: list[str]) -> Column:
+    """The one way a request's query terms enter a plan: ``term IN
+    (<lowercased, distinct, sorted literals>)``. Over a parquet postings
+    scan Catalyst pushes it into the reader (``PushedFilters``), so no
+    driver-built relation, Python worker or broadcast job is involved."""
+    return F.col("term").isin(sorted({t.lower() for t in terms}))
+
+
+def literal_rows(spark, schema: str, rows: list[tuple]) -> DataFrame:
+    """A small request-time relation (a few query rows) built from
+    literals: one ``inline`` over a single-row ``range``, so the plan
+    stays in the JVM. ``spark.createDataFrame`` of a Python list plans
+    as ``Scan ExistingRDD`` and starts Python workers for every request.
+    ``schema`` is ``"name type, ..."``; an empty ``rows`` gives an empty
+    frame of that schema."""
+    fields = [f.strip().split(None, 1) for f in schema.split(",")]
+    struct_t = "struct<" + ",".join(f"{n}:{t}" for n, t in fields) + ">"
+    structs = [
+        F.struct(*[F.lit(v).cast(t).alias(n) for v, (n, t) in zip(r, fields)])
+        for r in rows
+    ]
+    arr = F.array(*structs).cast(f"array<{struct_t}>")
+    return spark.range(0, 1, 1, 1).select(F.inline(arr))
+
+
 def posting_list(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Explode a corpus to (id, term) postings — the inverted-index
     building block used by ranking (TF) and term-count facets.

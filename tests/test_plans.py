@@ -48,12 +48,22 @@ def test_projection_ops_are_shuffle_free(spark, sf_dir, name):
 
 
 def test_ranking_filters_before_aggregation(spark, sf_dir):
-    # the broadcast of the tiny query-term set must sit BELOW the first
-    # aggregate: postings are filtered before any groupBy
+    # the literal query-term filter (term IN (...)) must sit BELOW the
+    # first aggregate: postings are filtered before any groupBy. The
+    # formatted plan numbers operators children-first, so "below" is a
+    # smaller operator id
+    import re
+
     plan = _plan(spark, sf_dir, "q06_tfidf_topk")
-    first_agg = plan.find("HashAggregate")
-    first_bjoin = plan.find("BroadcastHashJoin")
-    assert first_bjoin != -1 and first_agg != -1
+    term_filters = [
+        int(n)
+        for n in re.findall(
+            r"\((\d+)\) Filter[^\n]*\nInput[^\n]*\nCondition : term#\d+ IN \(", plan
+        )
+    ]
+    aggs = [int(n) for n in re.findall(r"\((\d+)\) HashAggregate", plan)]
+    assert term_filters and aggs
+    assert min(term_filters) < min(aggs)
     assert "SortMergeJoin" not in plan
 
 

@@ -182,3 +182,57 @@ def test_plane_column_memo(spark):
     b1 = S.build_lsh_buckets(emb, n_planes=4, dim=8, plane_fn="md5").collect()
     b2 = S.build_lsh_buckets(emb, n_planes=4, dim=8, plane_fn="md5").collect()
     assert sorted(map(tuple, b1)) == sorted(map(tuple, b2))
+
+
+def test_column_memos_rebuilt_under_new_gateway(spark, monkeypatch):
+    """The Column memos are keyed by the live JVM gateway: a memo built
+    under one gateway identity is rebuilt, not reused, under another
+    (a driver that relaunches its JVM in the same process)."""
+    from pyspark import SparkContext
+
+    from hbase_increment_index_spark.pipeline import similarity as S
+
+    emb = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [4.0, 4.0])], "vec_id long, embedding array<double>"
+    )
+    cents = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [3.0, 4.0])], "cid long, centroid array<double>"
+    )
+    vec = S.lit_vector([0.25, -0.5])
+    plane = S._plane(0, 4, "md5")
+    want = sorted(map(tuple, S.assign_cells(emb, cents).collect()))
+    assign_exprs = next(iter(S._ASSIGN_EXPR_MEMO.values()))
+    assert S.lit_vector([0.25, -0.5]) is vec  # same gateway: memo hit
+    assert S._plane(0, 4, "md5") is plane
+
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert S.lit_vector([0.25, -0.5]) is not vec
+    assert S._plane(0, 4, "md5") is not plane
+    assert sorted(map(tuple, S.assign_cells(emb, cents).collect())) == want
+    assert next(iter(S._ASSIGN_EXPR_MEMO.values())) is not assign_exprs
+    rebuilt = S.lit_vector([0.25, -0.5])
+    assert S.lit_vector([0.25, -0.5]) is rebuilt  # memoized again
+
+
+def test_carry_cols_clash_with_internal_columns_raises(spark):
+    """A carried column named like an internal column of the assign or
+    encode path would shadow or duplicate it: both refuse it."""
+    import pytest
+
+    from hbase_increment_index_spark.pipeline import similarity as S
+
+    emb = spark.createDataFrame(
+        [(0, [0.0, 1.0], 7)], "vec_id long, embedding array<double>, cid long"
+    )
+    cents = spark.createDataFrame([(0, [0.0, 0.0])], "cid long, centroid array<double>")
+    cb = S.pq_codebooks(emb, dim=2, m=2, seed_ids=[0])
+    for name in ("id", "vec", "cid", "_d", "vec_id"):
+        with pytest.raises(ValueError, match="assign_cells: carry_cols"):
+            S.assign_cells(emb.withColumn(name, F.lit(1)), cents, carry_cols=(name,))
+    for name in ("s", "sv", "code", "e", "b", "j", "cw", "vec_id"):
+        with pytest.raises(ValueError, match="pq_encode: carry_cols"):
+            S.pq_encode(emb.withColumn(name, F.lit(1)), cb, dim=2, m=2, carry_cols=(name,))
+    # a name clear of both sets is still carried
+    assert S.pq_encode(emb, cb, dim=2, m=2, carry_cols=("cid",)).columns == [
+        "vec_id", "s", "code", "cid"
+    ]
