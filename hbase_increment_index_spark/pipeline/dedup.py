@@ -371,8 +371,20 @@ def write_shingle_store(postings: DataFrame, path: str) -> None:
     """Persist the store partitioned by the shingle bucket — the
     probe's bucket IN-list becomes PartitionFilters (a directory
     prune), the same layout contract as the IVF cells/codes store
-    (partitionBy('cid'), bench.py)."""
-    postings.write.mode("overwrite").partitionBy("shb").parquet(path)
+    (partitionBy('cid'), bench.py).
+
+    One exchange on ``shb`` puts each bucket in one task, so each
+    bucket directory gets exactly one file: the layout the fold's own
+    commits keep. The file is sorted by (sh, doc) after ``shb`` (the
+    order the partitioned writer needs anyway), so each shingle's
+    postings are contiguous and the dictionary and run-length encodings
+    see every shingle once; a probe opens one file per bucket. At scale
+    a bucket's size bounds a file's, as in the fold; a larger bucket
+    count (``n_buckets`` of the postings and of the probe) bounds it
+    lower."""
+    postings.repartition("shb").sortWithinPartitions("shb", "sh", "doc").write.mode(
+        "overwrite"
+    ).partitionBy("shb").parquet(path)
 
 
 def incremental_near_dups_from_index(

@@ -734,7 +734,13 @@ def assign_cells(
     :func:`pq_encode` with ``carry_cols=('cid',)`` — gets both from
     the one zero-shuffle projection instead of an id-keyed join back
     against its input (guide §2.4). A carried name must not clash with
-    the assignment's internal columns (``_ASSIGN_COLS``)."""
+    the assignment's internal columns (``_ASSIGN_COLS``).
+
+    Precondition: ``id_col`` is unique in ``embeddings``. The output has
+    one row per input row, so a carried column stands in for an
+    id-keyed join back against the input only if each id names one
+    vector (a duplicated id would multiply the join's rows but not
+    these)."""
     _check_carry_cols("assign_cells", carry_cols, {id_col, *_ASSIGN_COLS})
     vecs = embeddings.select(
         F.col(id_col).alias("id"),
@@ -946,6 +952,12 @@ def pq_encode(
     cid with a post-encode join, which forced a full-corpus encode at
     serve time and an extra join in every plan). A carried name must
     not clash with the encoder's internal columns (``_ENCODE_COLS``).
+
+    Precondition: ``id_col`` is unique in ``embeddings``, which is
+    stronger than functional dependence. Rows sharing an id are grouped
+    into one (id, s) code here, where a post-encode id-keyed join would
+    multiply them. :func:`build_ivf_pq`'s carried-through ``cid`` is
+    result-identical to that join only under this precondition.
     """
     _check_carry_cols("pq_encode", carry_cols, {id_col, *_ENCODE_COLS})
     if dim % m:
@@ -1056,9 +1068,12 @@ def build_ivf_pq(
       exact-decimal means (:func:`label_cell_centroids`), k×dim rows.
     - ``codebooks`` (s, j, cw) — PQ codewords (:func:`pq_codebooks`).
     - ``cells`` (cid, id_col, vec_col) — the raw vectors co-located
-      with their cell assignment. At scale this is written
-      ``partitionBy('cid')`` so the exact re-rank reads only probed
-      directories.
+      with their cell assignment, in the input column's own type: a
+      float32 input is stored as ``array<float>`` (exact, half the bytes
+      of doubles), a double input as ``array<double>``; the serve path
+      casts to ``array<double>`` on read, so scores do not depend on it.
+      At scale this is written ``partitionBy('cid')`` so the exact
+      re-rank reads only probed directories.
     - ``codes`` (cid, id_col, s, code) — PQ codes co-located the same
       way; the ADC pass over a query reads n_probe/k of this table.
 
@@ -1095,7 +1110,10 @@ def build_ivf_pq(
         vecs, centroids, dist_decimals=dist_decimals, extra_cols=attr_cols
     ).localCheckpoint(eager=False)
     cells = assigned.select(
-        "cid", F.col("id").alias(id_col), F.col("vec").alias(vec_col), *attr_cols
+        "cid",
+        F.col("id").alias(id_col),
+        F.col("vec").cast(embeddings.schema[vec_col].dataType).alias(vec_col),
+        *attr_cols,
     )
     codebooks = pq_codebooks(
         embeddings, id_col=id_col, vec_col=vec_col, dim=dim, m=m, seed_ids=seed_ids

@@ -25,11 +25,19 @@ from hbase_increment_index_spark.search.tokenize import posting_list, query_term
 
 def build_inverted_index(corpus: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(term, id, tf) postings — one explode + one map-side-combined
-    groupBy over the corpus."""
+    groupBy over the corpus, sorted by (term, id) within each partition.
+
+    The sort is partition-local: it adds no exchange. Written, each
+    file is one run in term order: parquet's dictionary and run-length encodings then see
+    each term once per run and the ids in order, and a row group's term
+    min/max bound a contiguous term range, so a pushed ``term IN (...)``
+    can skip row groups once a file holds more than one. A fold commit
+    appends its delta's postings as one more sorted run."""
     return (
         posting_list(corpus, id_col, text_col)
         .groupBy("term", id_col)
         .agg(F.count(F.lit(1)).alias("tf"))
+        .sortWithinPartitions("term", id_col)
     )
 
 

@@ -6,6 +6,11 @@ coalescing), shuffle partitions sized to the parallelism rather than
 the 200 default, Arrow enabled for any pandas exchange, UTC session
 timezone so timestamp arithmetic is reproducible against the DuckDB
 oracle.
+
+Parquet is written with zstd instead of Spark's default snappy, so
+every bulk store, fold commit and sink holds fewer bytes for the same
+rows (the cell state and documents view about 40 % fewer); a reader
+needs no setting to read it.
 """
 
 from __future__ import annotations
@@ -65,6 +70,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.parquet.compression.codec", "zstd")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
