@@ -227,7 +227,7 @@ HEADLINE = [
     # deterministic random() source, the compare-and-delete CAS verb,
     # and unigram-LM tokenizer EM. cdc_commit_all_stores (above)
     # now folds the FULL 12-store fleet incl. the CC label
-    # delete-then-merge — its cost grows by the CC bootstrap pairing,
+    # fold — its cost grows by the CC bootstrap pairing,
     # by design (bootstrap-priced registry form).
     "q85_stream_classify",
     "q61t_stream_random",
@@ -534,9 +534,9 @@ def main() -> None:
     _d0 = docs.select("doc_id", "text")
     t0 = time.time()
     # the PAIR LIST persists beside the labels (r14): labels derive
-    # from it at build time, and each commit's delete step then
-    # re-pairs survivors by FILTERING the stored list (two broadcast
-    # semi-joins) instead of a fresh pairing job — see
+    # from it at build time, and each commit then drops the touched
+    # docs' pairs by FILTERING the stored list instead of re-pairing
+    # the affected components — see
     # pipeline.dedup.commit_cluster_state, which also maintains the
     # store per batch (work ∝ |delta|)
     ngram_jaccard_pairs(
@@ -821,8 +821,8 @@ def main() -> None:
             .unionByName(fresh_cells),
         }
         # the CC fold maintains BOTH cluster tables from one shared
-        # delta pairing: labels (delete-then-merge) and the pair store
-        # the next commit's delete step filters instead of re-pairing
+        # delta pairing: the pair store and the labels re-clustered
+        # from it for the touched components only
         cc_state = commit_cluster_state(
             _stored, _shstore, _shsizes, chg_dt, dels, "doc_id", "text",
             n=3, threshold=0.30, n_buckets=shingle_buckets,

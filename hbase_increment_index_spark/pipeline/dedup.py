@@ -435,7 +435,7 @@ def incremental_near_dups_from_index(
     ``incoming_postings`` (optional): the delta's (doc, sh, shb)
     postings, ALREADY built with this same n/n_buckets and ideally
     materialized — callers that also self-pair the delta
-    (:func:`commit_cluster_labels`) pass it so the delta is shingled
+    (:func:`commit_cluster_state`) pass it so the delta is shingled
     once, not per pairing. Output: (id_new, id_old, jaccard ≥
     threshold)."""
     delta = incoming_postings
@@ -1947,8 +1947,9 @@ def delete_from_clusters(
     only-paired-docs contract. Merge ≡ rebuild is oracle-proven
     (e2t_cluster_delete) and pytest-proven
     (tests/test_round12_ops.py). Together with
-    :func:`merge_cluster_labels` (the insert/update path) this
-    completes CC-label maintenance under the full CDC verb set."""
+    :func:`merge_cluster_labels` (the insert path) this covers the
+    CDC verbs one at a time; a mixed batch folds through
+    :func:`commit_cluster_state`, which needs neither."""
     dele = deleted_ids.select(F.col(id_col).alias("doc")).distinct()
     affected = (
         stored.join(F.broadcast(dele), "doc", "left_semi")
@@ -2118,46 +2119,11 @@ def commit_cluster_labels(
     store_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """CC-label maintenance under one MIXED CDC batch (inserts +
-    updates + deletes) — the composed, ordered fold
-    cdc_commit_all_stores uses, factored out so the ordering contract
-    is testable on arbitrary corpora.
-
-    A text update both REMOVES the old text's pairs (which can split a
-    component — inexpressible by any label merge) and ADDS the new
-    text's, so every upsert decomposes into delete(old identity) +
-    insert(new identity), and the fold runs two ordered verbs:
-
-    1. :func:`delete_from_clusters` over the ENTIRE touched-id set
-       (deletes ∪ changed ids; ids absent from the stored labels are
-       no-ops, so inserts cost nothing here) — scoped rebuild of only
-       the components that lost a member, survivors re-paired from the
-       persisted shingle store, no corpus text in the plan.
-    2. :func:`merge_cluster_labels` over the pairs incident to the
-       batch's POST-images: a store-served bipartite probe of the
-       changed docs against the kept (un-touched) corpus postings,
-       plus delta-internal direct pairing.
-
-    Delete-first is load-bearing: merging new pairs first would leave
-    updated docs' stale old-text connectivity in the labels, and step
-    1 only re-clusters components that lost a member of ITS delete
-    set — the staleness would survive. With this order every
-    intermediate state is exact, so commit ≡ rebuild over the final
-    corpus (pytest-proven including a mid-batch component split,
-    tests/test_round13_ops.py).
-
-    ``stored``/``store_postings``/``store_sizes`` describe the
-    PRE-batch state (labels + shingle store + sizes side table);
-    ``changed_docs`` holds post-images of inserts and updates;
-    ``deleted_ids`` the batch's delete set; ``n_buckets`` must equal
-    the value ``store_postings`` was built with (the shingle-store
-    modulus contract). ``store_pairs`` (optional): the PRE-batch
-    corpus pair list at this threshold — when the caller already has
-    it materialized (the in-plan bootstrap does, it just built the
-    stored labels from it), step 1's survivor re-pairing becomes two
-    broadcast semi-joins on it instead of a pairing job (see
-    :func:`delete_from_clusters`). Work: step 1 ∝ Σ|affected
-    components|, step 2 ∝ |delta pairs| — the corpus is never
-    re-paired."""
+    updates + deletes): the ``labels`` of :func:`commit_cluster_state`,
+    for callers that persist no pair store (cdc_commit_all_stores).
+    Same arguments; ``store_pairs`` is derived from the shingle store
+    when absent. Commit ≡ rebuild over the final corpus, including a
+    component split (tests/test_round13_ops.py)."""
     return commit_cluster_state(
         stored,
         store_postings,
@@ -2186,127 +2152,110 @@ def commit_cluster_state(
     n_buckets: int = SHINGLE_STORE_BUCKETS,
     store_pairs: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """:func:`commit_cluster_labels`' fold with every derived cluster
-    table it can maintain in one pass: returns ``{"labels": ...}`` and,
-    when ``store_pairs`` is given, also ``{"pairs": ...}`` — the
-    post-batch PAIR STORE (old pairs minus any with a touched endpoint,
-    plus the pairs incident to the batch), kept from ONE shared delta
-    pairing with the label fold. A serving deployment persists the
-    pair store beside the labels: the next commit's delete step then
-    never re-pairs survivors (two broadcast semi-joins on the stored
-    list), which is what makes the steady-state commit ∝ |delta|."""
-    touched = (
-        changed_docs.select(F.col(id_col).alias(id_col))
-        .unionByName(deleted_ids.select(F.col(id_col).alias(id_col)))
+    """Fold one MIXED CDC batch into the near-dup cluster stores:
+    returns ``{"labels": (doc, component), "pairs": (id_a, id_b)}``
+    after the batch, at n-gram Jaccard ``threshold``.
+
+    ``stored``: the (doc, component) labels (component = min doc id,
+    only paired docs labeled, :func:`connected_components`' contract);
+    ``store_pairs``: their (id_a, id_b) pair list, id_a < id_b — when
+    absent it is derived from the shingle store
+    (:func:`ngram_jaccard_pairs_from_index`); ``store_postings`` /
+    ``store_sizes``: the shingle store and its (doc, n_sh) side table,
+    built with this ``n`` and ``n_buckets`` (the modulus contract);
+    ``changed_docs``: post-images of inserts and updates;
+    ``deleted_ids``: the delete set. A pair's Jaccard depends on its two
+    documents alone and touched docs are dropped from the store before
+    it is probed, so the shingle store may be the pre-batch or the
+    staged post-batch one.
+
+    One verb, pairs first:
+
+    1. T = changed ids ∪ deleted ids, collected once (batch-bounded);
+       every later filter on T is a literal IN.
+    2. N = the pairs incident to the batch's post-images: a bipartite
+       probe of the changed docs against the store minus T plus the
+       delta-internal pairs (the delta is shingled once), canonical
+       id_a < id_b.
+    3. pairs′ = the stored pairs with neither endpoint in T, plus N.
+    4. affected = the stored components of T ∪ endpoints(N); scope =
+       their members ∪ T ∪ endpoints(N); labels′ = the stored rows
+       outside affected, plus the connected components of the pairs′
+       whose id_a is in scope.
+
+    Exact (≡ rebuild over the final corpus; pytest- and oracle-proven):
+    a component of the new graph that holds a touched doc or a new-pair
+    endpoint lies wholly inside scope, and every other one is a stored
+    component none of whose pairs changed. An update needs no ordering
+    rule — its old pairs leave with T, its new ones arrive in N — and
+    the argument holds whether ``stored`` holds the pre-batch or the
+    post-batch labels, so a replay after the labels were published but
+    the pairs were not is exact too. Work ∝ |N| + Σ|affected
+    components|: the corpus is never re-paired; the affected members
+    are collected to the driver, where connected_components' union-find
+    gathers their pairs anyway."""
+    if store_pairs is None:
+        store_pairs = ngram_jaccard_pairs_from_index(
+            store_postings, store_sizes, threshold=threshold
+        )
+    touched = {
+        r[0]
+        for r in changed_docs.select(id_col)
+        .unionByName(deleted_ids.select(id_col))
+        .collect()
+    } - {None}
+    hit = sorted(touched)
+    # the delta is shingled once for the bipartite probe and the
+    # delta-internal pairing
+    delta_postings = build_shingle_postings(
+        changed_docs, id_col, text_col, n, n_buckets
+    ).localCheckpoint(eager=False)
+    bip = incremental_near_dups_from_index(
+        store_postings.filter(~F.col("doc").isin(hit)),
+        store_sizes.filter(~F.col("doc").isin(hit)),
+        changed_docs,
+        id_col,
+        text_col,
+        n=n,
+        threshold=threshold,
+        n_buckets=n_buckets,
+        incoming_postings=delta_postings,
+    ).select(F.col("id_new").alias("id_a"), F.col("id_old").alias("id_b"))
+    internal = ngram_jaccard_pairs_from_index(
+        delta_postings, shingle_doc_sizes(delta_postings), threshold=threshold
+    ).select("id_a", "id_b")
+    # one identity per pair: the bipartite rows arrive (new, old)
+    new_pairs = (
+        bip.unionByName(internal)
+        .select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    pairs = (
+        store_pairs.filter(~F.col("id_a").isin(hit) & ~F.col("id_b").isin(hit))
+        .select("id_a", "id_b")
+        .unionByName(new_pairs)
+    )
+
+    ends = {v for r in new_pairs.collect() for v in r}
+    hit_components = (
+        stored.filter(F.col("doc").isin(sorted(touched | ends)))
+        .select("component")
         .distinct()
     )
-    # The fold's two heavy legs are INDEPENDENT — the delete-side
-    # scoped rebuild (step 1) and the batch's incident-pair
-    # computation (step 2's input) share nothing until the final
-    # merge — so they materialize CONCURRENTLY (two threads, one
-    # scheduling round). r17 measured the lazy alternative (fold both
-    # cuts into merge_cluster_labels' probe collect) and kept the
-    # eager threads: one job's serial stage chain lost the cross-leg
-    # overlap the threads buy (bootstrap construct 12-15 s eager vs
-    # 15-18 s lazy on the same host).
-    #
-    # labels_after_del feeds merge_cluster_labels THREE ways (the
-    # touched-label lookup for each pair side, then the final
-    # relabel) — without a cut each consumer re-runs the scoped
-    # rebuild (survivor re-pairing + CC), tripling step 1 (r13 verdict
-    # finding 1: this tripling was most of the commit capstone's
-    # wall). The post-delete label table is ∝ paired docs — the same
-    # size class the stored labels came in at, so materializing it is
-    # never larger than the input; at cluster scale the equivalent cut
-    # is writing the post-delete labels back to the label store.
-    def _build_labels_after_del() -> DataFrame:
-        # the checkpoint was A/B'd a second time in r17 session 2
-        # (interleaved arms, per-phase timing): dropping it — on the
-        # theory that the post-r14 scoped rebuild is cheap (CC result
-        # is driver data, only `untouched` re-derives) — made the fold
-        # WORSE (cc_fold 2.0-2.6 s with vs 2.4-4.3 s without, and the
-        # 13-leg execute regressed too). Keep it.
-        return delete_from_clusters(
-            stored,
-            touched,
-            None,
-            id_col,
-            text_col,
-            n=n,
-            threshold=threshold,
-            postings=store_postings,
-            sizes=store_sizes,
-            pairs=store_pairs,
-        ).localCheckpoint(eager=True)
-
-    # the batch's incident pairs feed the label merge AND (when the
-    # caller maintains one) the pair store — one cut for both. The
-    # delta is shingled ONCE: the postings feed the bipartite probe's
-    # delta side AND the delta-internal self-pairing (the from-index
-    # form, result-identical to direct pairing). LAZY checkpoint on
-    # the postings: the probe's bucket-collect is the first action
-    # over them, so the job that gathers the bucket IN-list
-    # materializes the cut.
-    def _build_new_pairs() -> DataFrame:
-        touched_doc = touched.withColumnRenamed(id_col, "doc")
-        kept_store = store_postings.join(
-            F.broadcast(touched_doc), "doc", "left_anti"
-        )
-        kept_sizes = store_sizes.join(F.broadcast(touched_doc), "doc", "left_anti")
-        delta_postings = build_shingle_postings(
-            changed_docs, id_col, text_col, n, n_buckets
-        ).localCheckpoint(eager=False)
-        bip = incremental_near_dups_from_index(
-            kept_store,
-            kept_sizes,
-            changed_docs,
-            id_col,
-            text_col,
-            n=n,
-            threshold=threshold,
-            n_buckets=n_buckets,
-            incoming_postings=delta_postings,
-        ).select(F.col("id_new").alias("id_a"), F.col("id_old").alias("id_b"))
-        internal = ngram_jaccard_pairs_from_index(
-            delta_postings, shingle_doc_sizes(delta_postings), threshold=threshold
-        ).select("id_a", "id_b")
-        # canonicalized to id_a < id_b (ngram_jaccard_pairs'
-        # convention): the bipartite rows arrive (new, old) — either
-        # order — and a pair STORE needs one identity per pair
-        return (
-            bip.unionByName(internal)
-            .select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    # the legs' jobs carry the caller's job group and description
-    inherit = inheritable_thread_target(stored.sparkSession)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_labels = pool.submit(inherit(_build_labels_after_del))
-        fut_pairs = pool.submit(inherit(_build_new_pairs))
-        labels_after_del = fut_labels.result()
-        new_pairs = fut_pairs.result()
-    out = {"labels": merge_cluster_labels(labels_after_del, new_pairs)}
-    if store_pairs is not None:
-        touched_doc = touched.withColumnRenamed(id_col, "doc")
-        kept_pairs = store_pairs.select("id_a", "id_b").join(
-            F.broadcast(touched_doc.withColumnRenamed("doc", "id_a")),
-            "id_a",
-            "left_anti",
-        ).join(
-            F.broadcast(touched_doc.withColumnRenamed("doc", "id_b")),
-            "id_b",
-            "left_anti",
-        ).select("id_a", "id_b")
-        out["pairs"] = kept_pairs.unionByName(new_pairs.select("id_a", "id_b"))
-    return out
+    members = (
+        stored.join(hit_components, "component").select("doc", "component").collect()
+    )
+    affected = sorted({c for _, c in members})
+    scope = sorted(touched | ends | {d for d, _ in members})
+    labels = (
+        stored.filter(~F.col("component").isin(affected))
+        .select("doc", "component")
+        .unionByName(connected_components(pairs.filter(F.col("id_a").isin(scope))))
+    )
+    return {"labels": labels, "pairs": pairs}
 
 
 # ------------------------------------------- fingerprint (exact) store

@@ -25,6 +25,7 @@ running inside codegen — no Python UDFs in any scan path.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -49,46 +50,11 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-#: memoized literal-vector Columns, keyed by the value tuple — one
-#: dim-wide literal array costs `dim` py4j round-trips to build, and
-#: query vectors / codeword slices repeat across a query's 5 bench
-#: runs (and across a serving driver's lifetime). Plan-side only
-#: (Columns are immutable expression trees); bounded FIFO.
-_LIT_VEC_MEMO: dict = {}
-
-#: the py4j gateway the Column memos (_LIT_VEC_MEMO, _PLANE_COL_CACHE,
-#: _ASSIGN_EXPR_MEMO) were built on; see _live_column_memos
-_MEMO_GATEWAY: list = [None]
-
-
-def _live_column_memos() -> None:
-    """Empty the Column memos when the live JVM gateway is not the one
-    they were built on. A memoized Column is a handle to a JVM object:
-    after the driver relaunches its JVM in the same Python process, a
-    stale handle fails with an opaque py4j error, so every memo lookup
-    first checks the gateway identity."""
-    from pyspark import SparkContext
-
-    gateway = SparkContext._gateway
-    if gateway is not _MEMO_GATEWAY[0]:
-        _LIT_VEC_MEMO.clear()
-        _PLANE_COL_CACHE.clear()
-        _ASSIGN_EXPR_MEMO.clear()
-        _MEMO_GATEWAY[0] = gateway
-
-
 def lit_vector(vec: list[float]) -> Column:
-    """A query vector as a literal array column (broadcast by value
-    into the codegen'd expression — no join at all)."""
-    _live_column_memos()
-    key = tuple(float(x) for x in vec)
-    col = _LIT_VEC_MEMO.get(key)
-    if col is None:
-        col = F.array(*[F.lit(x) for x in key])
-        if len(_LIT_VEC_MEMO) >= 128:
-            _LIT_VEC_MEMO.pop(next(iter(_LIT_VEC_MEMO)))
-        _LIT_VEC_MEMO[key] = col
-    return col
+    """A query vector as one ``array<double>`` literal column (broadcast
+    by value into the codegen'd expression — no join at all), built in
+    one JVM call rather than one per component."""
+    return F.lit(np.asarray(vec, dtype=np.float64))
 
 
 def knn_brute_force(
@@ -208,18 +174,6 @@ def knn_join_brute_force(
 #: memoized plane component values, keyed by (plane_fn, plane_idx, dim)
 _PLANE_CACHE: dict = {}
 
-#: memoized _assign distance/cid-lookup expression pairs, keyed by
-#: (centroid values, dist_decimals) — see _assign for the rationale
-_ASSIGN_EXPR_MEMO: dict = {}
-
-#: memoized plane literal COLUMNS, same key — a Column is an immutable
-#: expression tree, so one build serves every call site; rebuilding it
-#: per call paid `dim` py4j round-trips per plane per query (plan-side
-#: only, same class as the catalog's DataFrame memo — every action
-#: still recomputes from the inputs); bounded FIFO
-_PLANE_COL_CACHE: dict = {}
-_PLANE_COL_CAP = 128
-
 
 def _plane_values(plane_idx: int, dim: int, plane_fn: str = "xxhash64") -> list[float]:
     """Component values of deterministic pseudo-random hyperplane i:
@@ -277,15 +231,7 @@ def _plane_values(plane_idx: int, dim: int, plane_fn: str = "xxhash64") -> list[
 
 def _plane(plane_idx: int, dim: int, plane_fn: str = "xxhash64") -> Column:
     """The hyperplane as a literal array column (see _plane_values)."""
-    _live_column_memos()
-    key = (plane_fn, plane_idx, dim)
-    col = _PLANE_COL_CACHE.get(key)
-    if col is None:
-        col = F.array(*[F.lit(v) for v in _plane_values(plane_idx, dim, plane_fn)])
-        if len(_PLANE_COL_CACHE) >= _PLANE_COL_CAP:
-            _PLANE_COL_CACHE.pop(next(iter(_PLANE_COL_CACHE)))
-        _PLANE_COL_CACHE[key] = col
-    return col
+    return lit_vector(_plane_values(plane_idx, dim, plane_fn))
 
 
 def lsh_bucket(vec_col: Column, n_planes: int, dim: int, plane_fn: str = "xxhash64") -> Column:
@@ -627,41 +573,16 @@ def _assign(
         ((r["cid"], list(r["centroid"])) for r in centroids.collect()), key=lambda c: c[0]
     )
 
-    # The k-way distance array is a k×dim-literal expression tree
-    # (~1000 nodes at k=16, dim=64) whose construction costs ~0.5 s of
-    # driver time in py4j round-trips ALONE — per _assign call, before
-    # any analysis. The tree is a pure function of (centroid values,
-    # dist_decimals) and Columns are immutable expression trees, so it
-    # is memoized per that key and rebuilt only for a new centroid set
-    # (plan-side memo, the catalog-DataFrame-memo class: every action
-    # still recomputes from the inputs; measured repeat construction
-    # 0.72 s → 0.12 s at sf0.1 with identical plans and results).
-    memo_key = (
-        tuple((cid, tuple(map(float, c))) for cid, c in cents),
-        dist_decimals,
-    )
-    _live_column_memos()
-    cached = _ASSIGN_EXPR_MEMO.get(memo_key)
-    if cached is None:
-
-        def dist_to(c: list[float]) -> Column:
-            d = F.aggregate(
-                F.zip_with("vec", lit_vector(c), lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            return F.round(d, dist_decimals) if dist_decimals is not None else d
-
-        cached = (
-            F.array(*[dist_to(c) for _, c in cents]),
-            F.array(*[F.lit(cid) for cid, _ in cents]),
+    def dist_to(c: list[float]) -> Column:
+        d = F.aggregate(
+            F.zip_with("vec", lit_vector(c), lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
         )
-        if len(_ASSIGN_EXPR_MEMO) >= 32:
-            _ASSIGN_EXPR_MEMO.pop(next(iter(_ASSIGN_EXPR_MEMO)))
-        _ASSIGN_EXPR_MEMO[memo_key] = cached
-    darr, cid_lookup = cached
+        return F.round(d, dist_decimals) if dist_decimals is not None else d
 
-    scored = vecs.withColumn("_d", darr)
+    cid_lookup = F.array(*[F.lit(cid) for cid, _ in cents])
+    scored = vecs.withColumn("_d", F.array(*[dist_to(c) for _, c in cents]))
     # argmin with deterministic low-cid tie-break: array_position of the min
     best = F.array_position("_d", F.array_min("_d")) - 1
     return scored.select(
@@ -1030,7 +951,7 @@ def _adc_lut(codebooks: DataFrame, query_vec: list[float], m: int) -> DataFrame:
     w = dim // m
     parts = []
     for s in range(m):
-        qs = F.array(*[F.lit(float(x)) for x in query_vec[s * w : (s + 1) * w]])
+        qs = lit_vector(query_vec[s * w : (s + 1) * w])
         parts.append(
             codebooks.filter(F.col("s") == s).select(
                 "s",

@@ -1791,20 +1791,15 @@ def _commit_all_stores(spark: SparkSession, sf_dir: str, rebuilt: bool = False):
     CC labels need the one non-additive step in the commit: a text
     UPDATE both removes the old text's pairs (which can SPLIT a
     component — no label merge expresses that) and adds the new
-    text's. So the label fold decomposes every upsert into
-    delete(old identity) + insert(new identity) and runs in two
-    ordered verbs: (1) `delete_from_clusters` drops the deleted AND
-    updated ids — scoped rebuild of only the components that lost a
-    member, survivors re-paired FROM THE v1 SHINGLE STORE (no corpus
-    text in the plan); (2) `merge_cluster_labels` folds in the pairs
-    incident to the batch's post-images (store-served bipartite probe
-    against the kept corpus + delta-internal direct pairing). This
-    order is load-bearing: merging the new pairs FIRST would leave the
-    updated docs' stale old-text connectivity in the labels, and the
-    scoped delete only re-clusters components that lost a DELETED
-    member, so the staleness would survive. Delete-first makes every
-    intermediate state exact, hence merge ≡ rebuild overall
-    (pytest-proven, including a component split mid-batch)."""
+    text's. So the label fold (`commit_cluster_labels`, one verb)
+    works on PAIRS first: it drops every stored pair with a deleted or
+    updated endpoint, adds the pairs incident to the batch's
+    post-images (store-served bipartite probe against the kept corpus
+    + delta-internal pairing, FROM THE v1 SHINGLE STORE — no corpus
+    text in the plan), and re-clusters only the components those
+    touched docs and new-pair endpoints belong to; every other
+    component passes through. Commit ≡ rebuild (pytest-proven,
+    including a component split mid-batch)."""
     from hbase_increment_index_spark.numeric import dec
     from hbase_increment_index_spark.pipeline.dedup import (
         build_fingerprint_store,
@@ -2030,20 +2025,20 @@ def _commit_all_stores(spark: SparkSession, sf_dir: str, rebuilt: bool = False):
         facet_expr=skey,
         facet_alias="k",
     )
-    # CC labels: the composed delete-then-merge fold (see docstring;
-    # factored as pipeline.dedup.commit_cluster_labels so the ordering
-    # contract is property-testable on arbitrary corpora). The v1
+    # CC labels: the one-verb fold (see docstring; factored as
+    # pipeline.dedup.commit_cluster_labels so commit ≡ rebuild is
+    # property-testable on arbitrary corpora). The v1
     # bootstrap labels pair FROM THE CHECKPOINTED SHINGLE STORE
     # (result-identical to direct pairing, pytest-proven) — the v1
     # corpus is never re-shingled for the CC leg, and the sizes side
     # table is cut once for its two consumers (bootstrap pairing +
-    # the fold's survivor re-pairing).
+    # the fold's bipartite probe).
     sizes_v1 = shingle_doc_sizes(shingle_store_v1).localCheckpoint(eager=False)
     # (lazy — the CC probe collect below materializes the whole chain)
     # pair the v1 corpus ONCE: the materialized list bootstraps the
-    # labels AND serves the delete fold's survivor re-pairing (a pair's
-    # jaccard never changes when other docs are deleted), so the fold
-    # runs zero further corpus pairing jobs
+    # labels AND is the fold's pair store (a pair's jaccard never
+    # changes when other docs change), so the fold runs zero further
+    # corpus pairing jobs
     pairs_v1 = ngram_jaccard_pairs_from_index(
         shingle_store_v1, sizes_v1, threshold=cc_th
     ).localCheckpoint(eager=False)
@@ -2082,8 +2077,8 @@ def cdc_commit_all_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional postings, doclen, MinHash signatures, shingle postings,
     content fingerprints, facet counts, the mergeable percentile
     sketch, the (n, Σ) rollup, IDF stats, the IVF/PQ ANN index, and
-    the CC near-dup labels (delete-then-merge, the one ordered
-    non-additive fold) — each folded forward by its own ∝|delta| merge
+    the CC near-dup labels (the one non-additive fold: touched
+    components re-clustered from the pair store) — each folded forward by its own ∝|delta| merge
     from the same batch, the Spark equivalent of the reference's one
     commit flushing both its add and delete buffers atomically
     (SolrIndexTools.java:59-67). Output: one row per store with the

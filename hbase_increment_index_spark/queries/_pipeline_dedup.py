@@ -58,8 +58,7 @@ def e3l_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dims = []
     for i in range(8):
-        # lit_vector memoizes the 64-literal plane per value tuple, so
-        # repeat calls skip the 512 py4j round-trips (r17 session 2)
+        # lit_vector builds the 64-literal plane in one JVM call
         sign_arr = lit_vector([sign(i, j) for j in range(64)])
         dot = F.aggregate(
             F.zip_with(v, sign_arr, lambda a, b: a * b),

@@ -196,6 +196,10 @@ def merge_microbatch(
       components ``<index>_cc_labels`` (doc, component) and their pair
       list ``<index>_cc_pairs`` (id_a, id_b) at that n-gram Jaccard
       threshold (``commit_cluster_state`` over the staged shingles).
+      Like ``keys``, what the cluster fold collects to the driver is
+      bounded by the batch: its touched ids, the endpoints of its new
+      pairs and the members of the components those belong to. The
+      first commit into an empty index pairs the whole store instead.
     """
     if rollup_key_field is not None and rollup_value_field is None:
         raise ValueError(

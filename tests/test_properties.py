@@ -1034,8 +1034,8 @@ def test_scoped_cluster_delete_equals_rebuild(spark, token_docs, delete_idx):
 def test_commit_cluster_labels_equals_rebuild(spark, v1_toks, delete_idx, upserts):
     """Composed CC commit invariant (r13): for ANY v1 corpus and ANY
     mixed batch — deletes (incl. bridges and minima), text-changing
-    updates (old pairs out AND new pairs in), inserts — the ordered
-    delete-then-merge fold (commit_cluster_labels) equals a
+    updates (old pairs out AND new pairs in), inserts — the one-verb
+    fold (commit_cluster_labels) equals a
     from-scratch re-clustering of the final corpus."""
     from pyspark.sql import functions as F
 

@@ -1,7 +1,7 @@
 """Round-13 operators: the commit extended to the FULL derived-store
 fleet (fingerprints, positional postings, percentile sketch, CC
-labels), the composed delete-then-merge CC label fold under a mixed
-batch that SPLITS a component, and the round's new surface ops."""
+labels), the composed CC label fold under a mixed batch that SPLITS a
+component, and the round's new surface ops."""
 from __future__ import annotations
 
 import pytest
@@ -83,10 +83,11 @@ def test_commit_cc_labels_split(spark):
 
 
 def test_commit_cc_labels_merge_first_would_be_stale(spark):
-    """The ordering contract: running the label MERGE before the
-    scoped delete leaves the updated doc's stale old-text connectivity
-    in the table — the negative case that makes delete-first
-    load-bearing (commit_cluster_labels' docstring)."""
+    """An update cannot be folded by a label MERGE alone: merging the
+    updated doc's new pairs into the stored labels keeps its stale
+    old-text connectivity and glues two components together, while
+    commit_cluster_labels — which drops the touched doc's stored pairs
+    before re-clustering its components — separates them."""
     from hbase_increment_index_spark.pipeline.dedup import (
         build_shingle_postings,
         commit_cluster_labels,

@@ -100,11 +100,10 @@ def test_release_checkpoints_frees_blocks(spark):
     assert release_checkpoints(spark) == 0  # idempotent
 
 
-def test_assign_expr_memo_identity_and_isolation(spark):
-    """The _assign distance-expression memo is plan-side only: repeat
-    calls with the SAME centroid set reuse the built expressions (and
-    produce identical assignments), while a different centroid set or
-    rounding width gets its own entry — no cross-talk."""
+def test_assign_cells_repeat_and_isolation(spark):
+    """Nearest-centroid assignment is a pure function of its inputs:
+    repeat calls with the SAME centroid set give identical
+    assignments, while a different centroid set gives different ones."""
     from hbase_increment_index_spark.pipeline import similarity as S
 
     emb = spark.createDataFrame(
@@ -114,67 +113,20 @@ def test_assign_expr_memo_identity_and_isolation(spark):
     cents = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [3.0, 4.0])], "cid long, centroid array<double>"
     )
-    S._ASSIGN_EXPR_MEMO.clear()
     a1 = S.assign_cells(emb, cents).collect()
-    assert len(S._ASSIGN_EXPR_MEMO) == 1
-    key1, exprs1 = next(iter(S._ASSIGN_EXPR_MEMO.items()))
     a2 = S.assign_cells(emb, cents).collect()
-    # the memo was HIT: same key, same Column objects, identical result
-    assert next(iter(S._ASSIGN_EXPR_MEMO.items()))[1] is exprs1
     assert sorted(map(tuple, a1)) == sorted(map(tuple, a2))
-    # a different rounding width is a different entry
-    S.assign_cells(emb, cents, dist_decimals=2).collect()
-    assert len(S._ASSIGN_EXPR_MEMO) == 2
-    # a different centroid set is a different entry with different results
     cents2 = spark.createDataFrame(
         [(0, [9.0, 9.0]), (1, [0.0, 0.0])], "cid long, centroid array<double>"
     )
     a3 = S.assign_cells(emb, cents2).collect()
-    assert len(S._ASSIGN_EXPR_MEMO) == 3
     assert sorted(map(tuple, a1)) != sorted(map(tuple, a3))
 
 
-def test_assign_expr_memo_bounded(spark):
-    """The memo is capped (FIFO) so a long-lived driver serving many
-    distinct centroid sets cannot grow it without bound."""
-    from pyspark.sql import functions as F
+def test_lsh_bucketing_deterministic(spark):
+    """Hyperplane LSH bucketing is deterministic across builds."""
     from hbase_increment_index_spark.pipeline import similarity as S
 
-    emb = spark.createDataFrame(
-        [(0, [0.0]), (1, [5.0])], "vec_id long, embedding array<double>"
-    )
-    S._ASSIGN_EXPR_MEMO.clear()
-    for i in range(40):
-        cents = spark.createDataFrame(
-            [(0, [float(i)])], "cid long, centroid array<double>"
-        )
-        S.assign_cells(emb, cents).collect()
-    assert len(S._ASSIGN_EXPR_MEMO) <= 32
-
-
-def test_plane_column_memo_bounded(spark):
-    """_PLANE_COL_CACHE is capped (FIFO) like its sibling memos, so a
-    driver serving many planes cannot grow it without bound."""
-    from hbase_increment_index_spark.pipeline import similarity as S
-
-    S._PLANE_COL_CACHE.clear()
-    for i in range(S._PLANE_COL_CAP + 20):
-        S._plane(i, 2, "md5")
-        assert len(S._PLANE_COL_CACHE) <= S._PLANE_COL_CAP
-    assert ("md5", 0, 2) not in S._PLANE_COL_CACHE  # oldest evicted first
-    assert ("md5", S._PLANE_COL_CAP + 19, 2) in S._PLANE_COL_CACHE
-
-
-def test_plane_column_memo(spark):
-    """_plane returns the memoized Column for a repeat key and distinct
-    Columns for distinct planes; bucketing stays deterministic."""
-    from hbase_increment_index_spark.pipeline import similarity as S
-
-    c1 = S._plane(0, 8, "md5")
-    c2 = S._plane(0, 8, "md5")
-    c3 = S._plane(1, 8, "md5")
-    assert c1 is c2
-    assert c3 is not c1
     emb = spark.createDataFrame(
         [(i, [float((i * 3) % 7 - 3)] * 8) for i in range(20)],
         "vec_id long, embedding array<double>",
@@ -182,36 +134,6 @@ def test_plane_column_memo(spark):
     b1 = S.build_lsh_buckets(emb, n_planes=4, dim=8, plane_fn="md5").collect()
     b2 = S.build_lsh_buckets(emb, n_planes=4, dim=8, plane_fn="md5").collect()
     assert sorted(map(tuple, b1)) == sorted(map(tuple, b2))
-
-
-def test_column_memos_rebuilt_under_new_gateway(spark, monkeypatch):
-    """The Column memos are keyed by the live JVM gateway: a memo built
-    under one gateway identity is rebuilt, not reused, under another
-    (a driver that relaunches its JVM in the same process)."""
-    from pyspark import SparkContext
-
-    from hbase_increment_index_spark.pipeline import similarity as S
-
-    emb = spark.createDataFrame(
-        [(0, [0.0, 1.0]), (1, [4.0, 4.0])], "vec_id long, embedding array<double>"
-    )
-    cents = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [3.0, 4.0])], "cid long, centroid array<double>"
-    )
-    vec = S.lit_vector([0.25, -0.5])
-    plane = S._plane(0, 4, "md5")
-    want = sorted(map(tuple, S.assign_cells(emb, cents).collect()))
-    assign_exprs = next(iter(S._ASSIGN_EXPR_MEMO.values()))
-    assert S.lit_vector([0.25, -0.5]) is vec  # same gateway: memo hit
-    assert S._plane(0, 4, "md5") is plane
-
-    monkeypatch.setattr(SparkContext, "_gateway", object())
-    assert S.lit_vector([0.25, -0.5]) is not vec
-    assert S._plane(0, 4, "md5") is not plane
-    assert sorted(map(tuple, S.assign_cells(emb, cents).collect())) == want
-    assert next(iter(S._ASSIGN_EXPR_MEMO.values())) is not assign_exprs
-    rebuilt = S.lit_vector([0.25, -0.5])
-    assert S.lit_vector([0.25, -0.5]) is rebuilt  # memoized again
 
 
 def test_carry_cols_clash_with_internal_columns_raises(spark):

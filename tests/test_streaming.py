@@ -1199,13 +1199,13 @@ def test_dedup_stores_replay_after_partial_publish(
 
 #: Spark jobs of one commit into an index with state, documents and the
 #: shingle, fingerprint and cluster stores (same session as above)
-DEDUP_COMMIT_JOB_BUDGET = 43
+DEDUP_COMMIT_JOB_BUDGET = 19
 
 
 def test_dedup_commit_job_budget(spark, dirs):
     """One commit with every dedup store into an existing index stays
-    within its job budget, counted in the job group set around it: the
-    cluster fold's threads carry the caller's group."""
+    within its job budget, counted in the job group set around it (the
+    commit runs every job on the calling thread)."""
     from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
 
     _, index_path, _ = dirs

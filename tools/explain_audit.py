@@ -14,6 +14,7 @@ only as the historical r1-r3 subset for diffing.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 AUDITED = [
     "q01_filter_eq",
@@ -145,7 +146,7 @@ AUDITED = [
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from hbase_increment_index_spark.queries import QUERIES
     from hbase_increment_index_spark.session import get_spark
 

@@ -32,6 +32,7 @@ import shutil
 import sys
 import tempfile
 import time
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -47,7 +48,7 @@ def main() -> int:
         if a == "--batches":
             batches = int(sys.argv[1:][i + 1])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from hbase_increment_index_spark.catalog import load_table
     from hbase_increment_index_spark.cdc.cell_model import cell_log_from_events
     from hbase_increment_index_spark.cdc.index_builder import (

@@ -11,6 +11,7 @@ from __future__ import annotations
 import shutil
 import sys
 import time
+from pathlib import Path
 
 MULT = 10
 BASE = "/root/testdata/sf0.1"
@@ -84,7 +85,7 @@ def best_of_3(fn, spark, sf_dir) -> tuple[float, int]:
 
 def main() -> int:
     names = sys.argv[1:] or DEFAULT
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from hbase_increment_index_spark.queries import QUERIES
     from hbase_increment_index_spark.session import get_spark
 

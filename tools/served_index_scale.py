@@ -14,6 +14,7 @@ from __future__ import annotations
 import shutil
 import sys
 import time
+from pathlib import Path
 
 BASE = "/root/testdata/sf0.1"
 SCALED = "/tmp/sfx10_idx"
@@ -30,7 +31,7 @@ def best_of_3(mk) -> tuple[float, int]:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from pyspark.sql import functions as F
 
     from hbase_increment_index_spark.search.inverted import (
